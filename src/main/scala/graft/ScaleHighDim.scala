@@ -191,9 +191,9 @@ object ScaleHighDim {
       graft.operators.Recall.recallAtK(res, truth, k)
     for ((regime, nProbes) <- Seq(("probed", 8), ("exhaustive", nShards))) {
       // PQ-ADC walk (codes ⋈ graph), pure and reranked
-      val (_, _, pmAdc) = GraphLayout.serveAdcDecisionProbed(layout,
-        queries, nProbes)
-      val adcProbed = probedBytes(pmAdc.keySet, "codes")
+      val adcShards = Vamana.probedShards(queries, layout.centroids,
+        nProbes, Metric.L2)
+      val adcProbed = probedBytes(adcShards, "codes")
       for (kr <- Seq(0, 4)) {
         meter.delta()
         val (res, tA) = time {
@@ -208,13 +208,15 @@ object ScaleHighDim {
           s""""dims":$dims,"aniso":$aniso,"regime":"$regime","n_probes":$nProbes,""" +
           s""""k_reorder":$kr,"serve_sec":$tA,""" +
           s""""recall_at_$k":$rec,"probed_code_bytes":$adcProbed,""" +
-          s""""probed_shards":${pmAdc.size},""" +
+          s""""probed_shards":${adcShards.size},""" +
           s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
       }
       // binary Hamming walk (bincodes ⋈ graph), pure and reranked
-      val (_, _, pmH) = GraphLayout.serveHammingDecisionProbed(layout,
-        queries, nProbes)
-      val hProbed = probedBytes(pmH.keySet, "bincodes")
+      val (qWords, wordCents) = graft.operators.BinaryQuant.wordSpace(
+        queries, layout.centroids, layout.bin.get)
+      val hShards = Vamana.probedShards(qWords, wordCents, nProbes,
+        Metric.Hamming)
+      val hProbed = probedBytes(hShards, "bincodes")
       for (kr <- Seq(0, 4)) {
         meter.delta()
         val (res, tH) = time {
@@ -229,7 +231,7 @@ object ScaleHighDim {
           s""""dims":$dims,"aniso":$aniso,"regime":"$regime","n_probes":$nProbes,""" +
           s""""k_reorder":$kr,"serve_sec":$tH,""" +
           s""""recall_at_$k":$rec,"probed_code_bytes":$hProbed,""" +
-          s""""probed_shards":${pmH.size},""" +
+          s""""probed_shards":${hShards.size},""" +
           s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
       }
     }

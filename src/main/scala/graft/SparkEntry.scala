@@ -640,30 +640,16 @@ object SparkEntry {
     out
   }
 
-  /** q162: the SERVED binary index — word codes persisted in the graph
+  /** q162 / q187 / q188: the SERVED binary index through
+    * `GraphLayout.serveHamming` — word codes persisted in the graph
     * layout (8 bytes/row of walk state, the smallest serving footprint),
-    * Hamming walk over stored bincodes+graph partitions, exact rerank
-    * against only the candidate rows of data. All shards probed + full
-    * window ⇒ global Hamming top-R + exact rerank ≡ q155 (same oracle);
-    * thresholds round-trip the sidecar bit-exactly. */
+    * probed once by Hamming over the word-encoded batch, each probed
+    * shard's bincodes+graph dirs walked in one task (zero corpus
+    * shuffle), exact rerank against only the candidate rows of data.
+    * All shards probed + full window ⇒ global Hamming top-R + exact
+    * rerank ≡ q155 (same oracle); thresholds round-trip the sidecar
+    * bit-exactly. */
   private def binaryStoredQ(s: SparkSession, dir: String): DataFrame = {
-    val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.searchHamming(layout, embQueries(s, dir),
-        K, searchWindow = 1 << 14, nProbes = layout.centroids.size,
-        kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-  }
-
-  /** q188: the ONE binary serving entry point end-to-end —
-    * `GraphLayout.serveHamming` in Auto mode over q162/q187's store:
-    * probes once by Hamming over the word-encoded batch, dispatches
-    * (store on disk) to the zero-shuffle bincodes walk, reranks
-    * exactly. Rows ≡ both manual paths (GraphLayoutSpec), so
-    * q155/q162/q187's oracle certifies the binary dispatcher too —
-    * the serve() family is now oracle-certified across all four codec
-    * families (q184 data / q185 PQ / q186 IVF codecs / q188 binary). */
-  private def serveHammingAutoQ(s: SparkSession, dir: String): DataFrame = {
     val layout = binGraphLayout(s, dir)
     graft.operators.GraphLayout.serveHamming(layout, embQueries(s, dir),
         K, searchWindow = 1 << 14, nProbes = layout.centroids.size,
@@ -688,9 +674,9 @@ object SparkEntry {
       .orderBy("query_id", "rnk")
   }
 
-  /** The binary store q162/q187 share — ONE memoized builder (the
-    * q180/q184 `routedGraphLayout` pattern) so the cogroup and local
-    * binary serves cannot drift apart under the shared memo key. */
+  /** The binary store q162/q187/q188/q189 share — ONE memoized builder
+    * (the `routedGraphLayout` pattern) so the binary serves cannot drift
+    * apart under the shared memo key. */
   private def binGraphLayout(s: SparkSession, dir: String)
       : graft.operators.GraphLayout.Layout =
     memoized[graft.operators.GraphLayout.Layout]("graph_layout_bin", dir) {
@@ -701,22 +687,6 @@ object SparkEntry {
         bin = Some(binParams(s, dir)))
       graft.operators.GraphLayout.open(s, path)
     }
-
-  /** q187: the zero-corpus-shuffle BINARY serve — q162's Hamming walk +
-    * exact rerank through `searchHammingLocal`, which zips each probed
-    * shard's bincodes+graph dirs narrowly into the walk task (8 bytes of
-    * walk state per row — the smallest serving read of any codec; data
-    * touched only for the rerank candidates). ≡ searchHamming
-    * bit-for-bit (GraphLayoutSpec), so q155/q162's oracle certifies it
-    * verbatim. */
-  private def binaryStoredLocalQ(s: SparkSession, dir: String): DataFrame = {
-    val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.searchHammingLocal(layout,
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = layout.centroids.size, kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-  }
 
   private[graft] val DsirTargetMod = 7L
 
@@ -1085,24 +1055,23 @@ object SparkEntry {
     * layout, reading only the probed shards' graph+data partitions; must
     * be bit-identical to q24's in-memory search (same oracle). */
   private def vamanaStoredQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.search(storedGraphLayout(s, dir),
+    graft.operators.GraphLayout.serve(storedGraphLayout(s, dir),
         embQueries(s, dir), K, searchWindow = 1 << 14,
         nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
-  /** q180: the ZERO-corpus-shuffle stored serve — a ROUTED layout
-    * (persisted level-1) served via `searchRoutedLocal`, which zips each
-    * probed shard's data+graph partition dirs narrowly into the walk
-    * task (no corpus exchange at all; only the |Q|·probes·k top-k
-    * partials move). At exhaustive l1Probes routing ≡ flat probing and
-    * the local path ≡ the cogroup path bit-for-bit (HierRoutingSpec), so
-    * this certifies against q24/q150's oracle verbatim. */
-  private def vamanaStoredLocalQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchRoutedLocal(
-        routedGraphLayout(s, dir), embQueries(s, dir), K,
-        searchWindow = 1 << 14, l1Probes = 5, nProbes = VamanaProbes,
-        Metric.L2)
+  /** q180 / q184: the stored serve of a ROUTED layout (persisted
+    * level-1) through `GraphLayout.serve`, which zips each probed
+    * shard's data+graph partition dirs narrowly into the walk task (no
+    * corpus exchange at all; only the |Q|·probes·k top-k partials
+    * move). At exhaustive l1Probes routing ≡ flat probing
+    * (HierRoutingSpec), so this certifies against q24/q150's oracle
+    * verbatim. */
+  private def vamanaStoredRoutedQ(s: SparkSession, dir: String): DataFrame =
+    graft.operators.GraphLayout.serve(routedGraphLayout(s, dir),
+        embQueries(s, dir), K, searchWindow = 1 << 14,
+        nProbes = VamanaProbes, Metric.L2, l1Probes = 5)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
@@ -1120,26 +1089,12 @@ object SparkEntry {
       graft.operators.GraphLayout.open(s, path)
     }
 
-  /** q184: the ONE serving entry point end-to-end — `GraphLayout.serve`
-    * in Auto mode over q180's routed store: the dispatch computes the
-    * probe-union fraction and (store on disk) takes the zero-shuffle
-    * local path; rows are bit-identical to both manual paths
-    * (GraphLayoutSpec), so q180's oracle (= q24/q150's exact
-    * within-probed-shards kNN at exhaustive l1Probes) certifies the
-    * dispatcher itself through DuckDB. */
-  private def serveAutoQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.serve(routedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, Metric.L2, l1Probes = 5)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-
   /** q190: STREAMING query serving — the deployment shape of a 100 TB
     * index (store is persisted, queries arrive continuously): embQueries
     * stream in two micro-batches through
     * [[graft.streaming.StreamingServe.attachGraph]] against q180/q184's
     * routed store, each batch answered by `GraphLayout.serve` (probe-once
-    * routing, Auto dispatch) into its own replay-idempotent `batch_id=`
+    * routing, zero-shuffle walk) into its own replay-idempotent `batch_id=`
     * partition. Batch ≡ stream (StreamingServeSpec), so q184's oracle —
     * exact within-probed-shards kNN — certifies the streaming recipe
     * end-to-end through DuckDB. */
@@ -1266,52 +1221,28 @@ object SparkEntry {
       .orderBy("query_id", "rnk")
   }
 
-  /** q151: DiskANN serving from the store — codes-only walk over the
-    * persisted codes+graph partitions, exact rerank touching only the
-    * |Q|·kReorder·k candidate rows of data; ≡ q148 (same oracle), with
-    * codebooks round-tripped through the sidecar bit-exactly. */
+  /** q151 / q181 / q185: DiskANN serving from the store through
+    * `GraphLayout.serveAdc` — probed once on the walk metric, each probed
+    * shard's codes+graph dirs walked in one task (zero corpus shuffle),
+    * exact rerank touching only the |Q|·kReorder·k candidate rows of
+    * data; ≡ q148 (same oracle), with codebooks round-tripped through the
+    * sidecar bit-exactly. */
   private def pqWalkStoredQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchAdc(storedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-
-  /** q181: the zero-corpus-shuffle DiskANN serve — q151's codes-only
-    * walk + exact rerank through `searchAdcLocal`, which zips each
-    * probed shard's codes+graph dirs narrowly into the PqStore walk (no
-    * corpus exchange; data touched only for the |Q|·kReorder·k rerank
-    * candidates). ≡ searchAdc bit-for-bit (GraphLayoutSpec), so q148's
-    * oracle certifies it verbatim like q151. */
-  private def pqWalkStoredLocalQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchAdcLocal(storedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-
-  /** q185: the ONE compressed-serving entry point end-to-end —
-    * `GraphLayout.serveAdc` in Auto mode over q151/q181's stored PQ
-    * layout: probes once on the walk metric, dispatches (store on disk)
-    * to the zero-shuffle codes walk, reranks exactly. Rows are
-    * bit-identical to both manual ADC paths (GraphLayoutSpec), so q148's
-    * oracle certifies the dispatcher itself through DuckDB. */
-  private def serveAdcAutoQ(s: SparkSession, dir: String): DataFrame =
     graft.operators.GraphLayout.serveAdc(storedGraphLayout(s, dir),
         embQueries(s, dir), K, searchWindow = 1 << 14,
         nProbes = VamanaProbes, kReorder = PqWalkReorder)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
-  /** q182: filtered × compressed × LOCAL serving — q157's traverse-but-
-    * filter PQ-ADC walk through `searchAdcLocal`'s zero-corpus-shuffle
-    * path: the keep predicate is analyzer-resolved and bound against the
+  /** q182: filtered × compressed stored serving — q157's traverse-but-
+    * filter PQ-ADC walk through `serveAdc`'s zero-corpus-shuffle
+    * walk: the keep predicate is analyzer-resolved and bound against the
     * codes FILE schema (Bridge.resolveBoundPredicate) and evaluated per
     * decoded row inside the per-shard walk task. Full window ⇒ exact
     * ADC-over-kept — q157's oracle verbatim. */
-  private def pqWalkFilteredLocalQ(s: SparkSession, dir: String)
+  private def pqWalkStoredFilteredQ(s: SparkSession, dir: String)
       : DataFrame =
-    graft.operators.GraphLayout.searchAdcLocal(storedGraphLayout(s, dir),
+    graft.operators.GraphLayout.serveAdc(storedGraphLayout(s, dir),
         embQueries(s, dir), K, searchWindow = 1 << 14,
         nProbes = VamanaProbes, keep = col("id") % 3 =!= 1)
       .select("query_id", "rnk", "neighbor_id")
@@ -1333,7 +1264,7 @@ object SparkEntry {
     val deleted = embVectors(s, dir).filter(col("id") % 13 === 5).select("id")
     val upserted = graft.operators.GraphLayout.upsert(s, path, added,
       deleted, VamanaParams, Metric.L2)
-    graft.operators.GraphLayout.search(upserted, embQueries(s, dir), K,
+    graft.operators.GraphLayout.serve(upserted, embQueries(s, dir), K,
         searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
@@ -2126,7 +2057,7 @@ object SparkEntry {
         graft.operators.GraphLayout.write(clH, g, cents, path)
         graft.operators.GraphLayout.open(s, path)
       }
-    graft.operators.GraphLayout.search(layout, embQueries(s, dir), K,
+    graft.operators.GraphLayout.serve(layout, embQueries(s, dir), K,
         searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
@@ -2157,7 +2088,7 @@ object SparkEntry {
         graft.operators.GraphLayout.write(clH, g, cents, path)
         graft.operators.GraphLayout.open(s, path)
       }
-    graft.operators.GraphLayout.search(layout, embQueries(s, dir), K,
+    graft.operators.GraphLayout.serve(layout, embQueries(s, dir), K,
         searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
@@ -3420,15 +3351,15 @@ object SparkEntry {
     "q177_f16_vamana_stored" -> (vamanaStoredHalfQ _),
     "q178_npy_single_file" -> (npySingleFileQ _),
     "q179_npy_manifest_stream" -> (npyManifestStreamQ _),
-    "q180_vamana_stored_local" -> (vamanaStoredLocalQ _),
-    "q181_pq_walk_stored_local" -> (pqWalkStoredLocalQ _),
-    "q182_pq_walk_filtered_local" -> (pqWalkFilteredLocalQ _),
+    "q180_vamana_stored_local" -> (vamanaStoredRoutedQ _),
+    "q181_pq_walk_stored_local" -> (pqWalkStoredQ _),
+    "q182_pq_walk_filtered_local" -> (pqWalkStoredFilteredQ _),
     "q183_bf16_vamana_stored" -> (vamanaStoredBf16Q _),
-    "q184_serve_auto" -> (serveAutoQ _),
-    "q185_serve_adc_auto" -> (serveAdcAutoQ _),
+    "q184_serve_auto" -> (vamanaStoredRoutedQ _),
+    "q185_serve_adc_auto" -> (pqWalkStoredQ _),
     "q186_index_serve" -> (indexServeQ _),
-    "q187_binary_stored_local" -> (binaryStoredLocalQ _),
-    "q188_serve_hamming_auto" -> (serveHammingAutoQ _),
+    "q187_binary_stored_local" -> (binaryStoredQ _),
+    "q188_serve_hamming_auto" -> (binaryStoredQ _),
     "q189_serve_hamming_probed" -> (serveHammingProbedQ _),
     "q190_serve_stream" -> (serveStreamQ _),
     "q191_index_upsert" -> (indexUpsertQ _),
@@ -3825,17 +3756,17 @@ object SparkEntry {
     // q179: manifest-driven stream ≡ batch ≡ source, and a double decode
     // of a replayed shard would duplicate join rows and fail the count.
     "q179_npy_manifest_stream" -> OracleGen.fvecsRoundtrip,
-    // q180: zero-shuffle local serve at exhaustive l1Probes ≡ flat
-    // probing ≡ the cogroup walk (HierRoutingSpec pins both identities),
+    // q180: the routed stored serve at exhaustive l1Probes ≡ flat
+    // probing (HierRoutingSpec) ≡ the in-memory walk (StoredServeSpec),
     // so q24/q150's oracle certifies it verbatim.
     "q180_vamana_stored_local" -> OracleGen.vamanaShardedKnn(K, VamanaProbes),
-    // q181: local ADC serve ≡ searchAdc (GraphLayoutSpec pins it), so
-    // q148/q151's oracle certifies the zero-shuffle DiskANN path too.
+    // q181: the same stored ADC serve as q151, so q148/q151's oracle
+    // certifies it verbatim.
     "q181_pq_walk_stored_local" ->
       OracleGen.pqWalkRerank(PqM, PqK, K, VamanaProbes, PqWalkReorder),
-    // q182: filtered compressed serving through the LOCAL path — the
-    // keep predicate binds against the codes file schema and the walk
-    // ≡ searchShardedAdc(keep) (GraphLayoutSpec), so q157's filtered
+    // q182: filtered compressed stored serving — the keep predicate
+    // binds against the codes file schema and the walk
+    // ≡ searchShardedAdc(keep) (StoredServeSpec), so q157's filtered
     // ADC oracle certifies it verbatim.
     "q182_pq_walk_filtered_local" ->
       OracleGen.pqWalk(PqM, PqK, K, VamanaProbes, "(codes.id % 3) <> 1"),
@@ -3845,15 +3776,11 @@ object SparkEntry {
     // oracle applies unchanged.
     "q183_bf16_vamana_stored" ->
       OracleGen.vamanaShardedKnnI8(K, VamanaProbes, ByteScale),
-    // q184: serve() Auto over the q180 store — both dispatch outcomes
-    // are bit-identical to searchRouted[Local] (GraphLayoutSpec), and at
-    // exhaustive l1Probes routing ≡ flat, so q24/q150/q180's oracle
-    // certifies the dispatcher end-to-end.
+    // q184: the same routed stored serve as q180 — q24/q150/q180's
+    // oracle.
     "q184_serve_auto" -> OracleGen.vamanaShardedKnn(K, VamanaProbes),
-    // q185: serveAdc() Auto over the q151 store — both dispatch outcomes
-    // are bit-identical to searchAdc[Local] (GraphLayoutSpec), so
-    // q148/q151/q181's reranked-ADC oracle certifies the compressed
-    // dispatcher end-to-end.
+    // q185: the same stored ADC serve as q151 — q148/q151/q181's
+    // reranked-ADC oracle.
     "q185_serve_adc_auto" ->
       OracleGen.pqWalkRerank(PqM, PqK, K, VamanaProbes, PqWalkReorder),
     // q186: IndexLayout.serve over the routed IVFADC store — serve ≡
@@ -3861,13 +3788,11 @@ object SparkEntry {
     // q156/q169's oracle certifies the codec-layout dispatcher.
     "q186_index_serve" ->
       OracleGen.ivfPqSearch(PqM, PqK, K, IvfPqProbes),
-    // q187: the local binary serve ≡ searchHamming (GraphLayoutSpec pins
-    // it), all shards probed at full window ⇒ global Hamming top-R +
-    // exact rerank — q155/q162's oracle verbatim.
+    // q187: the same stored binary serve as q162 — all shards probed at
+    // full window ⇒ global Hamming top-R + exact rerank, q155/q162's
+    // oracle verbatim.
     "q187_binary_stored_local" -> OracleGen.binaryRerank(K, PqWalkReorder),
-    // q188: serveHamming() Auto over the q162 store — both dispatch
-    // outcomes ≡ searchHamming[Local] (GraphLayoutSpec), so the binary
-    // dispatcher certifies against the same oracle.
+    // q188: the same stored binary serve as q162 — the same oracle.
     "q188_serve_hamming_auto" -> OracleGen.binaryRerank(K, PqWalkReorder),
     // q189: SELECTIVE binary serving — Hamming probe selection over
     // word-encoded label centroids (ties by cid), Hamming ranks within

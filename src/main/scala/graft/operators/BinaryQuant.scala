@@ -65,6 +65,17 @@ object BinaryQuant {
     out.map(_.toDouble).toSeq
   }
 
+  /** The Hamming probe space of a query batch against shard centroids:
+    * the batch as (query_id, qvec of v1 word-doubles) and the centroids
+    * word-encoded by [[encodeWords]] — what every graph-walk Hamming
+    * probe scores. */
+  def wordSpace(queries: DataFrame, centroids: Seq[(Long, Seq[Double])],
+                p: Params): (DataFrame, Seq[(Long, Seq[Double])]) =
+    (queries.select(col("query_id"),
+      array(codeColumns(col("qvec"), p).map(_.cast("double")): _*)
+        .as("qvec")),
+      centroids.map { case (cid, cv) => (cid, encodeWords(cv, p)) })
+
   /** FULL-DENSITY (64 bits per BIGINT word) encode columns — the
     * bincodes LAYOUT v2 on-disk form: a true 1-bit-per-dimension packing
     * (a 64-d store is 8 B/row, half of v1's two half-full words and

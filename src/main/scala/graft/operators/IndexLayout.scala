@@ -163,7 +163,7 @@ object IndexLayout {
               "[" + c.mkString(",") + "]").mkString(",") + "]")
               .mkString(",")}]}"""
       }
-      writeSidecar(spark, s"$path/layout.json",
+      StoreFiles.writeSidecar(spark, path,
         s"""{"codec":$codecJson,""" +
           s""""byte_unsigned":${byteU.map(_.toString).getOrElse("null")},""" +
           s""""half_format":${halfF.map(f => s""""$f"""").getOrElse("null")},""" +
@@ -189,8 +189,6 @@ object IndexLayout {
       "IndexLayout.repair(spark, path)", "IndexLayout.write")
     openUnchecked(spark, path)
   }
-
-  private def markerPath(path: String): String = StoreMarker.markerPath(path)
 
   /** Everything [[openUnchecked]] reads EXCEPT the data directory: codec
     * + marks from the sidecar, the centroid table, the routing level.
@@ -235,7 +233,7 @@ object IndexLayout {
     val cTmp = new org.apache.hadoop.fs.Path(s"$path/centroids.tmp")
     if (!cfs.exists(cDst) && cfs.exists(cTmp))
       require(cfs.rename(cTmp, cDst), s"failed to recover $cDst from $cTmp")
-    val json = readSidecar(spark, s"$path/layout.json")
+    val json = StoreFiles.readSidecar(spark, path)
     import org.json4s._
     implicit val fmts: Formats = DefaultFormats
     val parsed = org.json4s.jackson.JsonMethods.parse(json)
@@ -321,18 +319,23 @@ object IndexLayout {
     StoreMarker.guard(spark, path, "layout",
       "IndexLayout.repair(spark, path)", "IndexLayout.write")
     val m = readMeta(spark, path)
-    val data = coldData(spark, path, m, queries, nProbes, metric, l1Probes)
-    val layout = Layout(data, m.centroids, m.codec, m.routing,
-      m.routingMetricName)
-    serve(layout, queries, k, nProbes, metric, l1Probes, kReorder)
+    coldData(spark, path, m, queries, nProbes, metric, l1Probes) match {
+      case Some(data) =>
+        serve(Layout(data, m.centroids, m.codec, m.routing,
+          m.routingMetricName), queries, k, nProbes, metric, l1Probes,
+          kReorder)
+      case None => StoreFiles.emptyResult(spark)
+    }
   }
 
   /** [[serveCold]]'s probe-pruned clustered frame: the probe union is
     * chosen driver-side with the SAME kernels the serve scan uses, and
-    * the read is rooted at ONLY the probed `cluster_id=` dirs. */
+    * the read is rooted at ONLY the probed `cluster_id=` dirs that exist
+    * (a centroid k-means left empty has none, and contributes no rows to
+    * the warm scan either); None when no probed shard has rows. */
   private def coldData(spark: SparkSession, path: String, m: Meta,
                        queries: DataFrame, nProbes: Int, metric: Metric,
-                       l1Probes: Int): DataFrame = {
+                       l1Probes: Int): Option[DataFrame] = {
     val centArr = m.centroids
       .map { case (cid, cv) => (cid, cv.toArray) }.toIndexedSeq
     import org.apache.spark.sql.functions.col
@@ -346,13 +349,12 @@ object IndexLayout {
         BatchScore.probeTopKHierarchical(qs, centArr, l1Arr, groupOf,
           l1Probes, nProbes, metric)
       } else BatchScore.probeTopK(qs, centArr, nProbes, metric)
-    val probed = probedPerQ.iterator.flatten.toArray.distinct.sorted
-    val dirs = probed.map(c => s"$path/data/cluster_id=$c")
-    require(dirs.nonEmpty, s"serveCold: no probed shards for $path " +
-      "(empty query batch or empty centroid table)")
-    markVec(
-      spark.read.option("basePath", s"$path/data").parquet(dirs: _*),
-      m.byteU, m.halfF)
+    val live = StoreFiles.liveShards(spark, path, Seq("data"),
+      probedPerQ.iterator.flatten.toSet)
+    if (live.isEmpty) None
+    else Some(markVec(spark.read.option("basePath", s"$path/data")
+      .parquet(live.map(c => s"$path/data/cluster_id=$c"): _*),
+      m.byteU, m.halfF))
   }
 
   /** Regression seam (r16 verdict: cold listing must stay ∝ probes, not
@@ -361,7 +363,7 @@ object IndexLayout {
   private[graft] def coldClusteredFor(spark: SparkSession, path: String,
       queries: DataFrame, nProbes: Int, metric: Metric): DataFrame =
     coldData(spark, path, readMeta(spark, path), queries, nProbes, metric,
-      l1Probes = 0)
+      l1Probes = 0).getOrElse(sys.error(s"no probed shard of $path has rows"))
 
   /** Search the layout with the codec-matched coarse scan: SQ layouts run
     * the decode-free code scan + full-precision reorder, LVQ layouts the
@@ -400,8 +402,8 @@ object IndexLayout {
 
   /** [[search]] routed through the PERSISTED level-1 table
     * ([[write]]'s `routingGroups`) — the stored-IVF twin of
-    * [[GraphLayout.searchRouted]]: probe selection scores the l1 groups
-    * first and only their member centroids after
+    * [[GraphLayout.serve]]'s routed probes: probe selection scores the
+    * l1 groups first and only their member centroids after
     * ([[BatchScore.probeTopKHierarchical]]), then the codec-matched scan
     * runs unchanged on the selected probes. At `l1Probes = |l1|` probe
     * selection is bit-identical to the flat sweep, so searchRouted ≡
@@ -460,12 +462,10 @@ object IndexLayout {
     * caller asks for routing (`l1Probes > 0`), falls back to the flat
     * probe sweep otherwise — so one call signature serves every codec
     * (Uncompressed/SQ/LVQ/LeanVec/IVFADC) and every layout, routed or
-    * not. There is no local/cogroup regime choice on this family: every
-    * coarse pass already broadcasts the probe list and scans only the
-    * probed `cluster_id=` partitions (PlanSpec pins the
+    * not. Every coarse pass broadcasts the probe list and scans only
+    * the probed `cluster_id=` partitions (PlanSpec pins the
     * PartitionFilters), so corpus rows never shuffle on ANY path.
-    * At `l1Probes = |l1|` routed ≡ flat bit-for-bit (IndexRoutingSpec),
-    * making the dispatch a pure cost decision like serve()'s. */
+    * At `l1Probes = |l1|` routed ≡ flat bit-for-bit (IndexRoutingSpec). */
   def serve(layout: Layout, queries: DataFrame, k: Int, nProbes: Int,
             metric: Metric, l1Probes: Int = 0,
             kReorder: Int = 3): DataFrame =
@@ -731,7 +731,7 @@ object IndexLayout {
     // from the centroid table just committed (mergedCents — parquet
     // round-trips the doubles bit-exactly, so training on the in-memory
     // copy ≡ the old read-back, minus a collect job)
-    val rg = routingGroupsOf(spark, path)
+    val rg = StoreFiles.routingGroupsOf(spark, path)
     val routing =
       if (rg > 0) {
         val rm = layout.routingMetricName match {
@@ -748,35 +748,5 @@ object IndexLayout {
         Some((l1, groupOf))
       } else None
     (mergedCents, routing)
-  }
-
-  /** The sidecar's recorded routing group count (0 = no routing). */
-  private def routingGroupsOf(spark: SparkSession, path: String): Int = {
-    import org.json4s._
-    implicit val fmts: Formats = DefaultFormats
-    (org.json4s.jackson.JsonMethods.parse(
-      readSidecar(spark, s"$path/layout.json")) \ "routing_groups") match {
-      case JNull | JNothing => 0
-      case node             => node.extract[Int]
-    }
-  }
-
-  private def writeSidecar(spark: SparkSession, path: String,
-                           json: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
-
-  private def readSidecar(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no layout sidecar at $p")
-    val in = fs.open(p)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    in.readFully(bytes); in.close()
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 }

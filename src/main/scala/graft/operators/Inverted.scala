@@ -213,41 +213,22 @@ object Inverted {
   * experimental_calibrate. */
 object Calibrate {
 
-  /** Recall of a ranked result against a (cached, broadcast-small) truth
-    * pair table: hits / (k·nq) with a broadcast SEMI join — identical to
-    * the intersect-count it replaces whenever the result is
-    * duplicate-free (the calibrate contract: k ranked rows per query),
-    * but one scan + one broadcast instead of two distinct aggregations
-    * and a shuffled set-op per dial evaluation. Truth is |Q|·k rows —
-    * broadcast-small at any corpus scale (queries are a batch). */
-  def recallPairs(result: DataFrame, truthPairs: DataFrame, k: Int,
-                  nq: Long): Double =
-    result.select("query_id", "neighbor_id")
-      .join(broadcast(truthPairs), Seq("query_id", "neighbor_id"),
-        "left_semi")
-      // the semi-join keeps BOTH copies of a duplicated result pair —
-      // dedupe the ≤ k·nq matched rows so a search path with
-      // tie-duplicates can't inflate recall and mis-calibrate the dial
-      // (intersect's set semantics, restored at post-join cardinality)
-      .distinct()
-      .count().toDouble / (k * nq)
-
-  /** Driver-side twin of [[recallPairs]] for calibration loops (guide
-    * §1.2 fixed cost): truth AND each dial's result are ≤ |Q|·k rows by
-    * the calibrate contract (queries are a batch; k is the serving dial),
-    * so collect the ranked pairs and count set-intersection hits locally
-    * — the SAME value as [[recallPairs]] (both are |distinct matched
-    * pairs| / (k·nq)), but one bounded collect job per dial instead of a
-    * broadcast + semi-join + distinct + count chain with its 2-3 AQE
-    * stage materializations and driver replanning gaps. The collect is
-    * calibration-batch-sized at ANY corpus scale — the reference's
-    * experimental_calibrate is likewise a driver loop over a query
-    * sample. */
+  /** The calibration truth as a driver-side pair set: truth is ≤ |Q|·k
+    * rows by the calibrate contract (queries are a batch; k is the
+    * serving dial), so it is collected once per calibration. */
   def truthSetOf(truth: DataFrame): Set[(Long, Long)] =
     truth.select(col("query_id").cast("long"),
         col("neighbor_id").cast("long")).collect()
       .iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** Recall of a ranked result against [[truthSetOf]]'s pair set:
+    * |distinct matched pairs| / (k·nq). Each dial's result is also
+    * ≤ |Q|·k rows, so it is collected and intersected locally — one
+    * bounded collect job per dial (guide §1.2 fixed cost). Distinct
+    * pairs, so a search path with tie-duplicates cannot inflate recall
+    * and mis-calibrate the dial. The collect is calibration-batch-sized
+    * at ANY corpus scale — the reference's experimental_calibrate is
+    * likewise a driver loop over a query sample. */
   def recallPairsLocal(result: DataFrame, truthSet: Set[(Long, Long)],
                        k: Int, nq: Long): Double = {
     val hits = result
@@ -308,19 +289,20 @@ object Calibrate {
                                  truth: DataFrame, k: Int,
                                  targetRecall: Double, minWindow: Int,
                                  maxWindow: Int): (Int, Int, Double) = {
-    val (w1, r1) = calibrateWindow(w => search(w, 0), truth, k, targetRecall,
-      minWindow, maxWindow)
-    if (r1 < targetRecall) return (w1, w1, r1) // unreachable: report max
+    // truth collected ONCE for both phases (bounded |Q|·k)
     val truthSet = truthSetOf(truth)
     val nq = truthSet.iterator.map(_._1).toSet.size.toLong
-    def recallAt(w: Int): Double =
-      recallPairsLocal(search(w, w1), truthSet, k, nq)
+    def recallAt(w: Int, capacity: Int): Double =
+      recallPairsLocal(search(w, capacity), truthSet, k, nq)
+    val (w1, r1) = calibrateWindowWith(w => recallAt(w, 0), targetRecall,
+      minWindow, maxWindow)
+    if (r1 < targetRecall) return (w1, w1, r1) // unreachable: report max
     var lo = math.max(k, minWindow / 2)
     var hi = w1
     var best = (w1, w1, r1)
     while (lo < hi) {
       val mid = lo + (hi - lo) / 2
-      val r = recallAt(mid)
+      val r = recallAt(mid, w1)
       if (r >= targetRecall) { best = (mid, w1, r); hi = mid }
       else lo = mid + 1
     }

@@ -185,3 +185,60 @@ private[graft] object StoreMarker {
     info
   }
 }
+
+/** File plumbing shared by the on-disk vector stores ([[GraphLayout]],
+  * [[IndexLayout]]): the `layout.json` sidecar, the routing group count
+  * it records, and the probed-shard reads of the cold serves. */
+private[graft] object StoreFiles {
+
+  private def sidecarPath(store: String) =
+    new org.apache.hadoop.fs.Path(s"$store/layout.json")
+
+  def writeSidecar(spark: SparkSession, store: String, json: String): Unit = {
+    val p = sidecarPath(store)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  def readSidecar(spark: SparkSession, store: String): String = {
+    val p = sidecarPath(store)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(p), s"no layout sidecar at $p")
+    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+    val in = fs.open(p)
+    try in.readFully(bytes) finally in.close()
+    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** The sidecar's recorded routing group count (0 = no routing). */
+  def routingGroupsOf(spark: SparkSession, store: String): Int = {
+    import org.json4s._
+    implicit val fmts: Formats = DefaultFormats
+    (org.json4s.jackson.JsonMethods.parse(readSidecar(spark, store)) \
+      "routing_groups") match {
+      case JNull | JNothing => 0
+      case node             => node.extract[Int]
+    }
+  }
+
+  /** The probed shards (ascending) whose `cluster_id=` dir exists under
+    * every one of `subs`. A centroid with no rows has no dirs: k-means
+    * can leave one empty at write time. One existence check per
+    * (shard, dir), so the cost is ∝ probes, never ∝ shards. */
+  def liveShards(spark: SparkSession, store: String, subs: Seq[String],
+                 probed: Iterable[Long]): Seq[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    probed.toSeq.sorted.filter(c => subs.forall(sub =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$store/$sub/cluster_id=$c"))))
+  }
+
+  /** What a serve returns when no probed shard has rows. */
+  def emptyResult(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long, Long, Double)]
+      .toDF("query_id", "rnk", "neighbor_id", "dist")
+  }
+}

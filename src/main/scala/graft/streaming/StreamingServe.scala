@@ -13,11 +13,11 @@ import graft.operators.{GraphLayout, IndexLayout}
   * ([[graft.operators.GraphLayout]] / [[graft.operators.IndexLayout]]),
   * queries arrive continuously, and every micro-batch is answered through
   * the family's ONE `serve()` entry point, so each batch gets the same
-  * probe-once routing, regime auto-dispatch, and zero-corpus-shuffle
-  * execution the batch API certifies (reference posture: the long-lived
-  * orchestrator object queries flow through,
-  * include/svs/orchestrators/manager.h:197-245 — here the "orchestrator"
-  * is the opened layout plus this attached stream).
+  * probe-once routing and zero-corpus-shuffle execution the batch API
+  * certifies (reference posture: the long-lived orchestrator object
+  * queries flow through, include/svs/orchestrators/manager.h:197-245 —
+  * here the "orchestrator" is the opened layout plus this attached
+  * stream).
   *
   * Sink protocol (exactly-once): results land under `outPath`
   * partitioned by `batch_id` and each micro-batch writes with DYNAMIC
@@ -44,12 +44,6 @@ import graft.operators.{GraphLayout, IndexLayout}
   *     both flat under a burst). No query is ever dropped. Source-side
   *     admission (fewer queries per TRIGGER) composes via the reader's
   *     own `maxFilesPerTrigger`/`maxOffsetsPerTrigger` options.
-  *   - `decisionLog` (graph families) — per-batch dispatch provenance:
-  *     each slice probes ONCE via the family's `serve*DecisionProbed`,
-  *     the map feeds `prebuiltProbes` (so logging adds zero extra routing
-  *     work), and (slice, mode, fraction, probed_shards) rows land under
-  *     the log path partitioned by `batch_id` with the same
-  *     dynamic-overwrite idempotence as the result sink.
   *
   * Scale shape: each micro-batch pays I/O ∝ its probed shard union and
   * exchange ∝ |batch|·probes·k (SCALE.md serving laws) — a steady query
@@ -65,40 +59,15 @@ object StreamingServe {
     StructField("neighbor_id", LongType),
     StructField("dist", DoubleType)))
 
-  /** Decision-log row shape ([[decisions]] on an unwritten log).
-    * `serve_ms` is the BATCH's measured serve wall (probe + serve +
-    * sink write, driver clock) — every slice row of one batch carries
-    * the same value because the batch's slices execute inside one sink
-    * write; it is a MEASUREMENT, not content, so a replayed batch
-    * rewrites it with the replay's own wall. */
-  val decisionSchema: StructType = StructType(Seq(
-    StructField("slice", IntegerType),
-    StructField("mode", org.apache.spark.sql.types.StringType),
-    StructField("fraction", DoubleType),
-    StructField("probed_shards", IntegerType),
-    StructField("serve_ms", DoubleType),
-    StructField("batch_id", LongType)))
-
   /** Attach a query stream to ANY per-batch serving function — the
-    * generic core the four family overloads share. Each micro-batch is
-    * served via `serve` and written to `outPath/batch_id=N/` with
-    * dynamic partition overwrite (idempotent under replay). Callers own
-    * the returned query's lifecycle. */
+    * generic core the four family overloads share. Each micro-batch
+    * (empty-skipped, then sliced by `maxQueriesPerBatch`) is served via
+    * `serve` and written to `outPath/batch_id=N/` with dynamic partition
+    * overwrite (idempotent under replay), one result write per batch.
+    * Callers own the returned query's lifecycle. */
   def attach(queryStream: DataFrame, outPath: String, checkpoint: String,
              trigger: Option[Trigger] = None, maxQueriesPerBatch: Int = 0)
-            (serve: DataFrame => DataFrame): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, None)(slice => (serve(slice), None))
-
-  /** The shared foreachBatch body: empty-skip → slice → serve →
-    * one result write per batch → one decision-log write per batch. */
-  private def attachCore(queryStream: DataFrame, outPath: String,
-                         checkpoint: String, trigger: Option[Trigger],
-                         maxQueriesPerBatch: Int,
-                         decisionLog: Option[String])
-                        (serveSlice: DataFrame =>
-                          (DataFrame, Option[(String, Double, Int)]))
-      : StreamingQuery = {
+            (serve: DataFrame => DataFrame): StreamingQuery = {
     val w0 = queryStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -109,23 +78,8 @@ object StreamingServe {
             if (maxQueriesPerBatch > 0) slices(batch, maxQueriesPerBatch)
             else if (batch.isEmpty) Seq.empty[DataFrame]
             else Seq(batch)
-          if (parts.nonEmpty) {
-            // the batch's serve wall spans probe-once routing (eager in
-            // serveSlice), the serve plans, and the sink write that
-            // executes them — the latency leg of the capacity-planning
-            // view (decisionStats joins it to the dispatch shape)
-            val t0 = System.nanoTime()
-            val served = parts.map(serveSlice)
-            writeBatch(served.map(_._1).reduce(_ union _), batchId, outPath)
-            val serveMs = (System.nanoTime() - t0) / 1e6
-            decisionLog.foreach { lp =>
-              val rows = served.zipWithIndex.collect {
-                case ((_, Some((m, f, ps))), i) => (i, m, f, ps) }
-              if (rows.nonEmpty)
-                writeDecisions(lp, batchId, rows, serveMs,
-                  batch.sparkSession)
-            }
-          }
+          if (parts.nonEmpty)
+            writeBatch(parts.map(serve).reduce(_ union _), batchId, outPath)
         }
       }
       .start()
@@ -136,7 +90,7 @@ object StreamingServe {
     * plan is STATICALLY empty — e.g. the source delivered no rows, or an
     * always-false predicate upstream let PropagateEmptyRelation collapse
     * it). Plans the optimizer cannot prove empty fall through to the
-    * one-small-job `batch.isEmpty` guard in [[attachCore]] — that
+    * one-small-job `batch.isEmpty` guard in [[attach]] — that
     * take(1) is the price of never serving a phantom batch, and it runs
     * only when a row-bearing plan arrived (the steady-state batch then
     * pays real serve jobs anyway, so the guard is noise there). */
@@ -185,23 +139,6 @@ object StreamingServe {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(outPath)
 
-  /** One micro-batch's dispatch-decision rows into the log's own
-    * `batch_id=` partition — the same idempotence recipe as
-    * [[writeBatch]], so a replayed batch rewrites its decision rows
-    * alongside its results. */
-  private def writeDecisions(logPath: String, batchId: Long,
-                             rows: Seq[(Int, String, Double, Int)],
-                             serveMs: Double,
-                             spark: SparkSession): Unit = {
-    import spark.implicits._
-    rows.toDF("slice", "mode", "fraction", "probed_shards")
-      .withColumn("serve_ms", lit(serveMs))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(logPath)
-  }
-
   /** Everything served so far, batch provenance dropped. TOTAL: a sink
     * no non-empty micro-batch has written yet (the directory does not
     * exist) returns an empty frame with `emptySchema` — the canonical
@@ -216,78 +153,6 @@ object StreamingServe {
     else spark.read.parquet(outPath).drop("batch_id")
   }
 
-  /** The dispatch-decision log (batch_id, slice, mode, fraction,
-    * probed_shards) a `decisionLog`-attached stream wrote — total like
-    * [[results]]: an unwritten log returns an empty frame. */
-  def decisions(spark: SparkSession, logPath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(logPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], decisionSchema)
-    else {
-      // partition-column inference types small batch ids as INT — pin
-      // the declared long so consumers see one schema regardless of id
-      // range; logs written before the latency leg existed read with a
-      // NULL serve_ms (percentiles skip nulls). mergeSchema matters: a
-      // MIXED log (old batches without serve_ms retained next to new
-      // ones) must not lose the column to whichever footer Spark
-      // happens to sample — merged, old rows null-fill and new rows
-      // keep their measured walls
-      val d0 = spark.read.option("mergeSchema", "true").parquet(logPath)
-        .withColumn("batch_id", col("batch_id").cast("long"))
-      if (d0.columns.contains("serve_ms")) d0
-      else d0.withColumn("serve_ms", lit(null).cast("double"))
-        .select("slice", "mode", "fraction", "probed_shards",
-          "serve_ms", "batch_id")
-    }
-  }
-
-  /** The decision log aggregated into the capacity-planning view it
-    * exists for: one row per dispatch mode with slice/batch counts, the
-    * probed-shard / probe-union-fraction spread, AND the per-batch
-    * serve-latency spread (p50/p90/max of `serve_ms`) — dispatch shape
-    * and latency in ONE view, so a probes/rate dial choice reads
-    * directly off "local batches at fraction ≲ f run p90 X ms". The
-    * latency fold dedupes to one wall per (batch, mode) first (a
-    * batch's slice rows share its wall — counting them per slice would
-    * weight bursty batches) and then keeps ONLY single-mode batches: a
-    * batch whose slices span modes (Auto can flip per slice) has one
-    * wall and no single mode to charge it to — attributing it to every
-    * mode present would let walls dominated by the OTHER mode's slices
-    * pollute each mode's percentiles. Excluded batches are not silent:
-    * each mode row carries `mixed_mode_batches`, the number of its
-    * batches whose wall went unattributed (per-slice walls cannot exist
-    * — a batch's slices execute inside ONE sink write). Exact
-    * percentiles (the log is driver-small: one row per (batch, slice));
-    * total like [[decisions]] — an unwritten log aggregates to zero
-    * rows, and pre-latency logs aggregate with NULL latency columns. */
-  def decisionStats(spark: SparkSession, logPath: String): DataFrame = {
-    val d = decisions(spark, logPath)
-    val perBatch = d.select("mode", "batch_id", "serve_ms").distinct()
-    val nModes = perBatch.groupBy("batch_id")
-      .agg(countDistinct("mode").as("n_modes"))
-    val latency = perBatch.join(nModes, Seq("batch_id"))
-      .groupBy("mode").agg(
-        expr("percentile(if(n_modes = 1, serve_ms, null), 0.5)")
-          .as("p50_serve_ms"),
-        expr("percentile(if(n_modes = 1, serve_ms, null), 0.9)")
-          .as("p90_serve_ms"),
-        max(when(col("n_modes") === 1, col("serve_ms")))
-          .as("max_serve_ms"),
-        sum(when(col("n_modes") > 1, 1L).otherwise(0L))
-          .as("mixed_mode_batches"))
-    d.groupBy("mode").agg(
-      count(lit(1)).as("slices"),
-      countDistinct("batch_id").as("batches"),
-      min("probed_shards").as("min_probed"),
-      expr("percentile(probed_shards, 0.5)").as("median_probed"),
-      max("probed_shards").as("max_probed"),
-      round(avg("fraction"), 6).as("avg_fraction"),
-      max("fraction").as("max_fraction"))
-      .join(latency, Seq("mode"), "left_outer")
-  }
-
   /** Sink retention: delete every `batch_id=` partition except the
     * NEWEST `retainBatches` (by batch id), bounding a long-lived
     * stream's partition count. Returns the expired batch ids.
@@ -298,7 +163,7 @@ object StreamingServe {
     * older batches are never re-delivered and can be expired freely.
     * This is a data-retention dial (expired results leave [[results]]
     * by design), the streaming analog of the text index's segment
-    * expiry. Works on the decision log too (same partition scheme). */
+    * expiry. */
   def expireBatches(spark: SparkSession, outPath: String,
                     retainBatches: Int): Seq[Long] = {
     require(retainBatches >= 1,
@@ -317,95 +182,42 @@ object StreamingServe {
   }
 
   /** Full-precision graph serving: every micro-batch through
-    * [[GraphLayout.serve]] (probe-once routing, Auto local/cogroup
-    * dispatch, `keep` honored). With `decisionLog`, each slice probes
-    * via [[GraphLayout.serveDecisionProbed]], logs what dispatched, and
-    * hands the map to serve's `prebuiltProbes` — probe once, record
-    * once. */
+    * [[GraphLayout.serve]] (probe-once routing, `keep` honored). */
   def attachGraph(queryStream: DataFrame, layout: GraphLayout.Layout,
                   outPath: String, checkpoint: String, k: Int,
                   searchWindow: Int, nProbes: Int, metric: Metric,
                   l1Probes: Int = 0,
                   keep: org.apache.spark.sql.Column = lit(true),
-                  mode: GraphLayout.ServeMode = GraphLayout.ServeMode.Auto,
-                  localMaxFraction: Double = 1.0,
                   trigger: Option[Trigger] = None,
-                  maxQueriesPerBatch: Int = 0,
-                  decisionLog: Option[String] = None): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveDecisionProbed(layout,
-          slice, nProbes, metric, l1Probes, localMaxFraction)
-        (GraphLayout.serve(layout, slice, k, searchWindow, nProbes, metric,
-          l1Probes, keep, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serve(layout, slice, k, searchWindow, nProbes, metric,
-          l1Probes, keep, mode, localMaxFraction), None)
-    }
+                  maxQueriesPerBatch: Int = 0): StreamingQuery =
+    attach(queryStream, outPath, checkpoint, trigger, maxQueriesPerBatch)(
+      GraphLayout.serve(layout, _, k, searchWindow, nProbes, metric,
+        l1Probes, keep))
 
   /** Compressed (PQ/ADC) serving: every micro-batch through
-    * [[GraphLayout.serveAdc]]; `decisionLog` via
-    * [[GraphLayout.serveAdcDecisionProbed]] (probe once, record once). */
+    * [[GraphLayout.serveAdc]]. */
   def attachAdc(queryStream: DataFrame, layout: GraphLayout.Layout,
                 outPath: String, checkpoint: String, k: Int,
                 searchWindow: Int, nProbes: Int, kReorder: Int = 0,
                 metric: Metric = Metric.L2,
                 keep: org.apache.spark.sql.Column = lit(true),
-                mode: GraphLayout.ServeMode = GraphLayout.ServeMode.Auto,
-                localMaxFraction: Double = 1.0,
                 trigger: Option[Trigger] = None,
-                maxQueriesPerBatch: Int = 0,
-                decisionLog: Option[String] = None): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveAdcDecisionProbed(
-          layout, slice, nProbes, metric, localMaxFraction)
-        (GraphLayout.serveAdc(layout, slice, k, searchWindow, nProbes,
-          kReorder, metric, keep, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serveAdc(layout, slice, k, searchWindow, nProbes,
-          kReorder, metric, keep, mode, localMaxFraction), None)
-    }
+                maxQueriesPerBatch: Int = 0): StreamingQuery =
+    attach(queryStream, outPath, checkpoint, trigger, maxQueriesPerBatch)(
+      GraphLayout.serveAdc(layout, _, k, searchWindow, nProbes, kReorder,
+        metric, keep))
 
   /** Binary (sign-bit / Hamming) serving: every micro-batch through
-    * [[GraphLayout.serveHamming]]; `decisionLog` via
-    * [[GraphLayout.serveHammingDecisionProbed]] (probe once, record
-    * once). */
+    * [[GraphLayout.serveHamming]]. */
   def attachHamming(queryStream: DataFrame, layout: GraphLayout.Layout,
                     outPath: String, checkpoint: String, k: Int,
                     searchWindow: Int, nProbes: Int, kReorder: Int,
                     rerankMetric: Metric = Metric.L2,
-                    mode: GraphLayout.ServeMode =
-                      GraphLayout.ServeMode.Auto,
-                    localMaxFraction: Double = 1.0,
                     trigger: Option[Trigger] = None,
-                    maxQueriesPerBatch: Int = 0,
-                    decisionLog: Option[String] = None): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveHammingDecisionProbed(
-          layout, slice, nProbes, localMaxFraction)
-        (GraphLayout.serveHamming(layout, slice, k, searchWindow, nProbes,
-          kReorder, rerankMetric, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serveHamming(layout, slice, k, searchWindow, nProbes,
-          kReorder, rerankMetric, mode, localMaxFraction), None)
-    }
-
-  /** The mode the serve actually ran: a forced `mode` overrides the Auto
-    * decision in the log exactly as it does in the dispatch. */
-  private def forcedOr(mode: GraphLayout.ServeMode, auto: String): String =
-    mode match {
-      case GraphLayout.ServeMode.Local   => "local"
-      case GraphLayout.ServeMode.Cogroup => "cogroup"
-      case GraphLayout.ServeMode.Auto    => auto
-    }
+                    maxQueriesPerBatch: Int = 0): StreamingQuery =
+    attach(queryStream, outPath, checkpoint, trigger, maxQueriesPerBatch)(
+      GraphLayout.serveHamming(layout, _, k, searchWindow, nProbes,
+        kReorder, rerankMetric))
 
   /** Stored-IVF codec serving: every micro-batch through
     * [[IndexLayout.serve]] (routed through the persisted level-1 when
@@ -416,8 +228,6 @@ object StreamingServe {
                   kReorder: Int = 3,
                   trigger: Option[Trigger] = None,
                   maxQueriesPerBatch: Int = 0): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, None)(slice =>
-      (IndexLayout.serve(layout, slice, k, nProbes, metric, l1Probes,
-        kReorder), None))
+    attach(queryStream, outPath, checkpoint, trigger, maxQueriesPerBatch)(
+      IndexLayout.serve(layout, _, k, nProbes, metric, l1Probes, kReorder))
 }

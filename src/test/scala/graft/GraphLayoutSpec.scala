@@ -46,7 +46,7 @@ class GraphLayoutSpec extends SparkSpec {
     assert(layout.centroids === cents)
 
     // served full-precision walk ≡ in-memory walk, bit-for-bit
-    val served = GraphLayout.search(layout, queries, 10, searchWindow = 40,
+    val served = GraphLayout.serve(layout, queries, 10, searchWindow = 40,
         nProbes = 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().toSeq
     val mem = Vamana.searchSharded(queries, clustered, graph, cents, 10,
@@ -56,7 +56,7 @@ class GraphLayoutSpec extends SparkSpec {
 
     // served ADC walk ≡ in-memory ADC walk over freshly-derived codes
     val codes = Pq.encodeClustered(clustered, p)
-    val servedAdc = GraphLayout.searchAdc(layout, queries, 10,
+    val servedAdc = GraphLayout.serveAdc(layout, queries, 10,
         searchWindow = 40, nProbes = 2)
       .orderBy("query_id", "rnk").collect().toSeq
     val memAdc = Vamana.searchShardedAdc(queries, codes, graph, cents, p,
@@ -65,7 +65,7 @@ class GraphLayoutSpec extends SparkSpec {
     assert(servedAdc.map(_.toSeq) === memAdc.map(_.toSeq))
 
     // rerank path from the store ≡ in-memory rerank
-    val servedRr = GraphLayout.searchAdc(layout, queries, 10,
+    val servedRr = GraphLayout.serveAdc(layout, queries, 10,
         searchWindow = 40, nProbes = 2, kReorder = 4)
       .orderBy("query_id", "rnk").collect().toSeq
     val memRr = Vamana.searchShardedAdcRerank(queries, codes, graph, cents,
@@ -131,9 +131,9 @@ class GraphLayoutSpec extends SparkSpec {
     GraphLayout.write(merged, graph2, cents2, path2, pq = Some(p))
     val fresh = GraphLayout.open(spark, path2)
     def rows(l: GraphLayout.Layout) = {
-      val a = GraphLayout.search(l, queries, 10, 1 << 14, 4, Metric.L2)
+      val a = GraphLayout.serve(l, queries, 10, 1 << 14, 4, Metric.L2)
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-      val b = GraphLayout.searchAdc(l, queries, 10, 1 << 14, 4,
+      val b = GraphLayout.serveAdc(l, queries, 10, 1 << 14, 4,
         kReorder = 4).orderBy("query_id", "rnk").collect()
         .map(_.toSeq).toSeq
       (a, b)
@@ -162,55 +162,13 @@ class GraphLayoutSpec extends SparkSpec {
     assert(layout.bin.get.thresholds === b.thresholds)
     // all shards probed + full window ⇒ global Hamming top-R + exact
     // rerank — must equal the flat in-memory two-pass bit-for-bit
-    val served = GraphLayout.searchHamming(layout, queries, 10,
+    val served = GraphLayout.serveHamming(layout, queries, 10,
         searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val mem = BinaryQuant.searchHammingRerank(queries,
         BinaryQuant.encode(data, b), b, data, 10, 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(served === mem)
-    // the zero-corpus-shuffle local twin ≡ the cogroup path bit-for-bit,
-    // exhaustive probes AND a selective probe subset
-    val servedLocal = GraphLayout.searchHammingLocal(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(servedLocal === served)
-    val sel = GraphLayout.searchHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(GraphLayout.searchHammingLocal(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq === sel)
-    // a memory-only layout cannot serve locally — loud failure
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchHammingLocal(layout.copy(path = None), queries,
-        10, searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-    }
-    assert(e.getMessage.contains("open"))
-    // serveHamming(): the one binary entry point — Auto dispatches local
-    // (store on disk) with rows ≡ both manual paths at both regimes;
-    // an in-memory layout auto-cogroups instead of erroring
-    val (hm1, hf1) = GraphLayout.serveHammingDecision(layout, queries,
-      nProbes = 1)
-    assert(hm1 === "local" && hf1 <= 1.0, s"($hm1, $hf1)")
-    val servedH = GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(servedH === served)
-    assert(servedH === GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4,
-        mode = GraphLayout.ServeMode.Cogroup)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq)
-    val selServed = GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(selServed === sel)
-    assert(GraphLayout.serveHammingDecision(layout.copy(path = None),
-      queries, nProbes = 1)._1 === "cogroup")
-    assert(servedH === GraphLayout.serveHamming(layout.copy(path = None),
-        queries, 10, searchWindow = 1 << 14, nProbes = cents.size,
-        kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq)
     // upsert keeps bincodes in sync: after an add+delete, the served
     // global rerank equals the in-memory two-pass over the survivors
     val added = data.filter(col("id") % 61 === 2).orderBy("id").limit(6)
@@ -224,7 +182,7 @@ class GraphLayoutSpec extends SparkSpec {
     val survivors = data
       .join(dels, Seq("id"), "left_anti")
       .unionByName(added.drop("cluster_id"))
-    val servedUp = GraphLayout.searchHamming(up, queries, 10,
+    val servedUp = GraphLayout.serveHamming(up, queries, 10,
         searchWindow = 1 << 14, nProbes = up.centroids.size, kReorder = 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val memUp = BinaryQuant.searchHammingRerank(queries,
@@ -335,7 +293,7 @@ class GraphLayoutSpec extends SparkSpec {
         searchWindow = 1 << 14, nProbes = rep.centroids.size, kReorder = 0)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(hammed.intersect(delSeq.toSet).isEmpty)
-    val adced = GraphLayout.searchAdc(rep, queries, 10,
+    val adced = GraphLayout.serveAdc(rep, queries, 10,
         searchWindow = 1 << 14, nProbes = rep.centroids.size, kReorder = 0)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(adced.intersect(delSeq.toSet).isEmpty)
@@ -348,9 +306,9 @@ class GraphLayoutSpec extends SparkSpec {
       Metric.L2)
     assert(up.centroids === twin.centroids)
     def servedAll(l: GraphLayout.Layout) = Seq(
-      GraphLayout.search(l, queries, 10, 1 << 14, l.centroids.size,
+      GraphLayout.serve(l, queries, 10, 1 << 14, l.centroids.size,
         Metric.L2),
-      GraphLayout.searchAdc(l, queries, 10, 1 << 14, l.centroids.size,
+      GraphLayout.serveAdc(l, queries, 10, 1 << 14, l.centroids.size,
         kReorder = 4),
       GraphLayout.serveHamming(l, queries, 10, 1 << 14, l.centroids.size,
         kReorder = 4))
@@ -456,20 +414,14 @@ class GraphLayoutSpec extends SparkSpec {
     assert(b.words64 < b.words)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    // bit-parity across versions: cogroup, local, and the dispatcher, at
-    // exhaustive AND selective probes (identical neighbor sets on the
-    // same grid — Hamming sums are grouping-invariant)
+    // bit-parity across versions at exhaustive AND selective probes
+    // (identical neighbor sets on the same grid — Hamming sums are
+    // grouping-invariant)
     for (np <- Seq(cents.size, 1)) {
-      val expect = rows(GraphLayout.searchHamming(l1, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4))
-      assert(rows(GraphLayout.searchHamming(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
-        s"cogroup np=$np")
-      assert(rows(GraphLayout.searchHammingLocal(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
-        s"local np=$np")
       assert(rows(GraphLayout.serveHamming(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
+        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) ===
+        rows(GraphLayout.serveHamming(l1, queries, 10,
+          searchWindow = 1 << 14, nProbes = np, kReorder = 4)),
         s"serve np=$np")
     }
     // pre-v2 sidecar (no version field) opens as v1 and still serves.
@@ -484,9 +436,9 @@ class GraphLayoutSpec extends SparkSpec {
       sc.replace("\"version\":1,", "").getBytes)
     val lOld = GraphLayout.open(spark, pathV1)
     assert(lOld.binVersion === 1)
-    assert(rows(GraphLayout.searchHammingLocal(lOld, queries, 10,
+    assert(rows(GraphLayout.serveHamming(lOld, queries, 10,
       searchWindow = 1 << 14, nProbes = 1, kReorder = 4)) ===
-      rows(GraphLayout.searchHammingLocal(l1, queries, 10,
+      rows(GraphLayout.serveHamming(l1, queries, 10,
         searchWindow = 1 << 14, nProbes = 1, kReorder = 4)))
     // unknown version refuses to open (fail loudly, never misread words)
     java.nio.file.Files.write(scPath, new String(
@@ -513,10 +465,10 @@ class GraphLayoutSpec extends SparkSpec {
     assert(u2.binVersion === 2 && u1.binVersion === 1)
     assert(u2.binCodes.get.columns.count(_.startsWith("w")) === b.words64)
     assert(u1.binCodes.get.columns.count(_.startsWith("w")) === b.words)
-    assert(rows(GraphLayout.searchHammingLocal(u2, queries, 10,
+    assert(rows(GraphLayout.serveHamming(u2, queries, 10,
       searchWindow = 1 << 14, nProbes = u2.centroids.size,
       kReorder = 4)) ===
-      rows(GraphLayout.searchHammingLocal(u1, queries, 10,
+      rows(GraphLayout.serveHamming(u1, queries, 10,
         searchWindow = 1 << 14, nProbes = u1.centroids.size,
         kReorder = 4)))
   }
@@ -551,239 +503,6 @@ class GraphLayoutSpec extends SparkSpec {
       .filter(col("id") === 90000L).count() === 1)
   }
 
-  test("searchAdcLocal (zero-corpus-shuffle DiskANN serve) ≡ searchAdc " +
-      "bit-for-bit, pure-ADC and reranked; refuses a memory-only layout") {
-    val (_, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_adclocal"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    // pure ADC ranks
-    assert(rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3)))
-    // exact rerank on top (touches only candidate rows of data)
-    assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2)))
-    // cosine walks L2 and reranks cosine, same as searchAdc's contract
-    assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2, metric = Metric.Cosine)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2,
-        metric = Metric.Cosine)))
-    val mem = layout.copy(path = None)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchAdcLocal(mem, queries, 5, 32, 3)
-    }
-    assert(e.getMessage.contains("open"))
-    // a layout written WITHOUT routing serves locally through the flat
-    // probe sweep — ≡ search bit-for-bit
-    assert(rows(GraphLayout.searchLocal(layout, queries, 5, 32, 3,
-        Metric.L2)) ===
-      rows(GraphLayout.search(layout, queries, 5, 32, 3, Metric.L2)))
-  }
-
-  test("keep predicate on the compressed serving paths: searchAdcLocal/" +
-      "searchAdc(keep) ≡ searchShardedAdc(keep) bit-for-bit; excluded " +
-      "ids never emitted, pure-ADC and reranked") {
-    val (_, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_adckeep"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
-    val layout = GraphLayout.open(spark, path)
-    val keep = col("id") % 3 =!= 1
-    val codes = Pq.encodeClustered(clustered, p)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    // pure ADC: local ≡ cogroup ≡ in-memory under the same predicate
-    val localF = rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-      keep = keep))
-    assert(localF ===
-      rows(Vamana.searchShardedAdc(queries, codes, graph, cents, p, 5, 32,
-        3, Metric.L2, keep = keep)))
-    assert(localF ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, keep = keep)))
-    localF.foreach(r =>
-      assert(r(2).asInstanceOf[Long] % 3 !== 1, s"filtered id emitted: $r"))
-    // the predicate changes the result (it actually filters something)
-    assert(localF !== rows(GraphLayout.searchAdcLocal(layout, queries, 5,
-      32, 3)))
-    // reranked: the rerank sees only kept candidates on both paths
-    assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2, keep = keep)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2,
-        keep = keep)))
-  }
-
-  test("serve(): one entry point auto-dispatches local vs cogroup by " +
-      "probe-union fraction; rows bit-identical to both manual paths at " +
-      "both regimes; override + keep honored") {
-    val (_, cents, clustered, graph, _) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_serve"
-    GraphLayout.write(clustered, graph, cents, path, routingGroups = 2)
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // SELECTIVE regime: one query, one probe → fraction 1/4 → local at
-    // the default threshold AND at the conservative 0.5 dial
-    val q1 = queries.orderBy("query_id").limit(1)
-    val (m1, f1) = GraphLayout.serveDecision(layout, q1, nProbes = 1,
-      Metric.L2, l1Probes = 1)
-    assert(m1 === "local" && f1 <= 0.5, s"($m1, $f1)")
-    assert(GraphLayout.serveDecision(layout, q1, nProbes = 1, Metric.L2,
-      l1Probes = 1, localMaxFraction = 0.5)._1 === "local")
-    val servedSel = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2, l1Probes = 1))
-    assert(servedSel === rows(GraphLayout.searchRoutedLocal(layout, q1, 5,
-      32, l1Probes = 1, nProbes = 1, Metric.L2)))
-    assert(servedSel === rows(GraphLayout.searchRouted(layout, q1, 5, 32,
-      l1Probes = 1, nProbes = 1, Metric.L2)))
-
-    // SATURATING regime: every query, exhaustive probes → fraction 1.
-    // Default (post-r12 O(1)-planning measurement): still local — zero
-    // corpus shuffle wins both regimes. The localMaxFraction DIAL pins
-    // the other outcome: at 0.5 a saturating sweep dispatches cogroup.
-    val (m2, f2) = GraphLayout.serveDecision(layout, queries, nProbes = 4,
-      Metric.L2, l1Probes = 2)
-    assert(m2 === "local" && f2 > 0.5, s"($m2, $f2)")
-    assert(GraphLayout.serveDecision(layout, queries, nProbes = 4,
-      Metric.L2, l1Probes = 2, localMaxFraction = 0.5)._1 === "cogroup")
-    val servedSat = rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2))
-    assert(servedSat === rows(GraphLayout.searchRouted(layout, queries, 5,
-      32, l1Probes = 2, nProbes = 4, Metric.L2)))
-    assert(servedSat === rows(GraphLayout.searchRoutedLocal(layout,
-      queries, 5, 32, l1Probes = 2, nProbes = 4, Metric.L2)))
-    // the dialed-down serve dispatches cogroup — rows unchanged
-    assert(servedSat === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, localMaxFraction = 0.5)))
-
-    // override forces the other path, rows unchanged (pure cost decision)
-    assert(servedSat === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2,
-      mode = GraphLayout.ServeMode.Local)))
-    assert(servedSel === rows(GraphLayout.serve(layout, q1, 5, 32,
-      nProbes = 1, Metric.L2, l1Probes = 1,
-      mode = GraphLayout.ServeMode.Cogroup)))
-
-    // flat dispatch (l1Probes = 0 ignores routing): ≡ search/searchLocal
-    val servedFlat = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2))
-    assert(servedFlat === rows(GraphLayout.searchLocal(layout, q1, 5, 32,
-      1, Metric.L2)))
-    assert(servedFlat === rows(GraphLayout.search(layout, q1, 5, 32, 1,
-      Metric.L2)))
-
-    // keep honored on both dispatch outcomes
-    val keep = col("id") % 3 =!= 1
-    val keptLocal = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2, l1Probes = 1, keep = keep))
-    keptLocal.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    val keptCog = rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-      localMaxFraction = 0.5)) // dialed down ⇒ the cogroup+keep path
-    keptCog.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    assert(keptCog === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-      mode = GraphLayout.ServeMode.Local)))
-
-    // an in-memory layout (no path) can only cogroup — Auto must not
-    // dispatch local into a sys.error
-    val mem = layout.copy(path = None)
-    val (m3, _) = GraphLayout.serveDecision(mem, q1, nProbes = 1,
-      Metric.L2, l1Probes = 1)
-    assert(m3 === "cogroup")
-    assert(servedSel === rows(GraphLayout.serve(mem, q1, 5, 32,
-      nProbes = 1, Metric.L2, l1Probes = 1)))
-  }
-
-  test("serveAdc(): one compressed-serving entry point auto-dispatches " +
-      "local vs cogroup; rows bit-identical to both manual ADC paths; " +
-      "keep + rerank + cosine-walks-L2 + override honored") {
-    val (_, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_serveadc"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // SELECTIVE regime: one query, one probe → local at the default dial
-    val q1 = queries.orderBy("query_id").limit(1)
-    val (m1, f1) = GraphLayout.serveAdcDecision(layout, q1, nProbes = 1)
-    assert(m1 === "local" && f1 <= 0.5, s"($m1, $f1)")
-    val servedSel = rows(GraphLayout.serveAdc(layout, q1, 5, 32,
-      nProbes = 1))
-    assert(servedSel === rows(GraphLayout.searchAdcLocal(layout, q1, 5, 32,
-      nProbes = 1)))
-    assert(servedSel === rows(GraphLayout.searchAdc(layout, q1, 5, 32,
-      nProbes = 1)))
-
-    // SATURATING regime: default stays local (zero corpus shuffle wins
-    // both regimes post-r12); the dial pins the cogroup outcome
-    val (m2, f2) = GraphLayout.serveAdcDecision(layout, queries,
-      nProbes = 4)
-    assert(m2 === "local" && f2 > 0.5, s"($m2, $f2)")
-    assert(GraphLayout.serveAdcDecision(layout, queries, nProbes = 4,
-      localMaxFraction = 0.5)._1 === "cogroup")
-    val servedSat = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4))
-    assert(servedSat === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 4)))
-    assert(servedSat === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4, localMaxFraction = 0.5))) // dialed ⇒ cogroup, same rows
-
-    // override forces the other path, rows unchanged
-    assert(servedSel === rows(GraphLayout.serveAdc(layout, q1, 5, 32,
-      nProbes = 1, mode = GraphLayout.ServeMode.Cogroup)))
-    assert(servedSat === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4, mode = GraphLayout.ServeMode.Local)))
-
-    // rerank + keep on both dispatch outcomes ≡ the manual paths
-    val keep = col("id") % 3 =!= 1
-    val kept = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep))
-    kept.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    assert(kept === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep)))
-    assert(kept === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep, localMaxFraction = 0.5)))
-
-    // cosine walks L2 and reranks cosine on BOTH dispatch outcomes —
-    // and the probe map (built on the walk metric) matches the manual
-    // paths' probing exactly
-    val cosServed = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine))
-    assert(cosServed === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine)))
-    assert(cosServed === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine,
-      mode = GraphLayout.ServeMode.Cogroup)))
-    // cosine with NO rerank cannot walk ADC — loud failure
-    assertThrows[IllegalArgumentException] {
-      GraphLayout.serveAdc(layout, queries, 5, 32, nProbes = 3,
-        metric = Metric.Cosine)
-    }
-
-    // an in-memory layout (no path) can only cogroup — Auto must not
-    // dispatch local into a sys.error
-    val mem = layout.copy(path = None)
-    assert(GraphLayout.serveAdcDecision(mem, q1, nProbes = 1)._1 ===
-      "cogroup")
-    assert(servedSel === rows(GraphLayout.serveAdc(mem, q1, 5, 32,
-      nProbes = 1)))
-  }
-
   test("upsert ↔ local-serve contract: a serve planned pre-upsert fails " +
       "loudly once its probed partitions are overwritten — never a " +
       "silent mixed read; a reopened layout serves the merged corpus") {
@@ -798,8 +517,8 @@ class GraphLayoutSpec extends SparkSpec {
     // the probed set must include the shard the upsert will overwrite);
     // zipServe pins the shard file list at plan time — that is the
     // snapshot the contract is about
-    val planned = GraphLayout.searchRoutedLocal(layout, queries, 5, 32,
-      l1Probes = 2, nProbes = 4, Metric.L2)
+    val planned = GraphLayout.serve(layout, queries, 5, 32, nProbes = 4,
+      Metric.L2, l1Probes = 2)
     val preRows = planned.select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(preRows.nonEmpty)
@@ -827,13 +546,15 @@ class GraphLayoutSpec extends SparkSpec {
         hasFnf(t.getCause))
     assert(hasFnf(e), s"expected FileNotFound-rooted failure, got $e")
 
-    // the REOPENED layout serves the merged corpus: local ≡ cogroup over
-    // the upserted store, added ids reachable, deleted ids gone
-    val local = GraphLayout.searchRoutedLocal(reopened, queries, 5, 32,
-        l1Probes = 2, nProbes = 4, Metric.L2)
+    // the REOPENED layout serves the merged corpus: the stored serve ≡ the
+    // in-memory walk over the upserted store's frames, deleted ids gone
+    val local = GraphLayout.serve(reopened, queries, 5, 32, nProbes = 4,
+        Metric.L2, l1Probes = 2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val cog = GraphLayout.searchRouted(reopened, queries, 5, 32,
+    val (l1, groupOf) = reopened.routing.get
+    val cog = Vamana.searchShardedHierarchical(queries, reopened.clustered,
+        reopened.graph, reopened.centroids, l1, groupOf, 5, 32,
         l1Probes = 2, nProbes = 4, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
@@ -844,129 +565,13 @@ class GraphLayoutSpec extends SparkSpec {
         s"deleted id served: $r"))
   }
 
-  test("Auto dispatch deliberately IGNORES cache residency: a cached " +
-      "layout frame changes no family's decision (measured — the corpus " +
-      "exchange dominates, SCALE.md scale10m_serve_cached); the manual " +
-      "Cogroup dial serves the cached store with identical rows") {
-    val (data, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val b = graft.operators.BinaryQuant.train(data)
-    val path = "/tmp/graft_graphlayout_cached"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
-      bin = Some(b))
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // on-disk, nothing cached: all three families dispatch local
-    assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-      === "local")
-    assert(GraphLayout.serveAdcDecision(layout, queries, 2)._1 === "local")
-    assert(GraphLayout.serveHammingDecision(layout, queries, 2)._1
-      === "local")
-    val base = rows(GraphLayout.serve(layout, queries, 5, 32, 2,
-      Metric.L2))
-
-    // cache every frame the cogroup paths would read. r13 first shipped
-    // the obvious rule (cached ⇒ cogroup), then MEASURED it at 10M:
-    // cogroup-on-cached 34.8 s / 4.68 GB exchange vs local-on-cached
-    // 4.2 s / 174 KB — the exchange dominates regardless of where the
-    // input rows live, so the rule was REVERSED and this spec pins the
-    // reversal: decisions are cache-blind, the manual dial remains.
-    layout.clustered.cache().count()
-    layout.graph.cache().count()
-    layout.codes.get.cache().count()
-    try {
-      assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-        === "local", "cached frames must NOT flip the data family")
-      assert(GraphLayout.serveAdcDecision(layout, queries, 2)._1
-        === "local", "cached frames must NOT flip the ADC family")
-      assert(GraphLayout.serveHammingDecision(layout, queries, 2)._1
-        === "local", "cached frames must NOT flip the binary family")
-      // Auto (local) on the cached store: rows unchanged
-      assert(rows(GraphLayout.serve(layout, queries, 5, 32, 2,
-        Metric.L2)) === base)
-      // the manual dial serves THROUGH the cached frames, same rows
-      assert(rows(GraphLayout.serve(layout, queries, 5, 32, 2, Metric.L2,
-        mode = GraphLayout.ServeMode.Cogroup)) === base)
-      assert(rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-        nProbes = 2, mode = GraphLayout.ServeMode.Cogroup)) ===
-        rows(GraphLayout.serveAdc(layout, queries, 5, 32, nProbes = 2)))
-    } finally {
-      layout.clustered.unpersist(true)
-      layout.graph.unpersist(true)
-      layout.codes.get.unpersist(true)
-    }
-    assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-      === "local")
-  }
-
-  test("serveDecisionProbed hands serve() its probe map: one routing " +
-      "computation end-to-end, rows identical, and the map is HONORED " +
-      "(a truncated map serves only its shards)") {
-    val (_, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_probed"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
-      routingGroups = 2)
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // inspect-then-serve: the decision's map, handed back, reproduces
-    // the self-probed serve bit-for-bit (routed AND flat)
-    val (m1, f1, pmR) = GraphLayout.serveDecisionProbed(layout, queries,
-      nProbes = 2, Metric.L2, l1Probes = 2)
-    assert(m1 === "local" && f1 > 0 && pmR.nonEmpty)
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, l1Probes = 2, prebuiltProbes = Some(pmR))) ===
-      rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2, l1Probes = 2)))
-    val (_, _, pmF) = GraphLayout.serveDecisionProbed(layout, queries,
-      nProbes = 2, Metric.L2)
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, prebuiltProbes = Some(pmF))) ===
-      rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2)))
-
-    // the map is authoritative, not advisory: serving a TRUNCATED map
-    // equals the manual path given the same truncation — proof the
-    // dispatched search probes exactly the decision's shards instead of
-    // recomputing its own routing
-    val keep = pmF.keySet.min
-    val pmCut = pmF.filter { case (cid, _) => cid == keep }
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, prebuiltProbes = Some(pmCut))) ===
-      rows(GraphLayout.searchLocal(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2, prebuiltProbes = Some(pmCut))))
-
-    // the ADC and binary twins honor their maps the same way
-    val bPath = "/tmp/graft_graphlayout_probed_bin"
-    val (dataB, centsB, clusteredB, graphB, _) = fixture()
-    GraphLayout.write(clusteredB, graphB, centsB, bPath, pq = Some(p),
-      bin = Some(graft.operators.BinaryQuant.train(dataB)))
-    val lb = GraphLayout.open(spark, bPath)
-    val (_, _, pmA) = GraphLayout.serveAdcDecisionProbed(lb, queries,
-      nProbes = 2)
-    assert(rows(GraphLayout.serveAdc(lb, queries, 5, 32, nProbes = 2,
-      prebuiltProbes = Some(pmA))) ===
-      rows(GraphLayout.serveAdc(lb, queries, 5, 32, nProbes = 2)))
-    val (_, _, pmH) = GraphLayout.serveHammingDecisionProbed(lb, queries,
-      nProbes = 2)
-    assert(rows(GraphLayout.serveHamming(lb, queries, 5, 32, nProbes = 2,
-      kReorder = 2, prebuiltProbes = Some(pmH))) ===
-      rows(GraphLayout.serveHamming(lb, queries, 5, 32, nProbes = 2,
-        kReorder = 2)))
-  }
-
   test("probe-pruned rerank: served rerank paths scan only probed data " +
       "partitions (PartitionFilters on cluster_id) with rows identical " +
       "to the unpruned manual paths") {
+    import graft.operators.{BinaryQuant, Rerank}
     val (data, cents, clustered, graph, p) = fixture()
     val queries = Tables.embeddingQueries(spark, sfDir)
-    val b = graft.operators.BinaryQuant.train(data)
+    val b = BinaryQuant.train(data)
     val path = "/tmp/graft_graphlayout_pruned_rerank"
     GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
       bin = Some(b))
@@ -979,9 +584,15 @@ class GraphLayoutSpec extends SparkSpec {
     val q1 = queries.orderBy("query_id").limit(2)
     val servedH = GraphLayout.serveHamming(layout, q1, 5, 1 << 12,
       nProbes = 1, kReorder = 2)
-    // identical rows to the manual path that scans the full data frame
-    assert(rows(servedH) === rows(GraphLayout.searchHammingLocal(layout,
-      q1, 5, 1 << 12, nProbes = 1, kReorder = 2)))
+    // identical rows to the in-memory walk reranked against the FULL
+    // data frame
+    val (qWords, wordCents) = BinaryQuant.wordSpace(q1, cents, b)
+    val wordVecs = clustered.select(col("cluster_id"), col("id"),
+      array(BinaryQuant.codeColumns(col("vec"), b).map(_.cast("double")): _*)
+        .as("vec"))
+    assert(rows(servedH) === rows(Rerank.exact(Vamana.searchSharded(qWords,
+      wordVecs, graph, wordCents, 2 * 5, 1 << 12, 1, Metric.Hamming), q1,
+      clustered, 5, Metric.L2)))
     // the rerank's data scan is partition-pruned: the FileSourceScan
     // over the data dir carries a cluster_id MEMBERSHIP partition
     // filter (one probed shard folds isin to an equality; several stay
@@ -1004,14 +615,15 @@ class GraphLayoutSpec extends SparkSpec {
     // the reranked ADC dispatcher prunes the same way, rows unchanged
     val servedA = GraphLayout.serveAdc(layout, q1, 5, 1 << 12,
       nProbes = 1, kReorder = 2)
-    assert(rows(servedA) === rows(GraphLayout.searchAdcLocal(layout, q1,
-      5, 1 << 12, nProbes = 1, kReorder = 2)))
+    assert(rows(servedA) === rows(Vamana.searchShardedAdcRerank(q1,
+      Pq.encodeClustered(clustered, p), graph, cents, p, clustered, 5, 2,
+      1 << 12, nProbes = 1)))
     assert(dataScanPruned(servedA),
       "expected a cluster_id membership partition filter on the ADC " +
         "rerank's data scan")
   }
 
-  test("layout without PQ opens with no codes and searchAdc fails loudly") {
+  test("layout without PQ opens with no codes and serveAdc fails loudly") {
     val (_, cents, clustered, graph, _) = fixture()
     val queries = Tables.embeddingQueries(spark, sfDir)
     val path = "/tmp/graft_graphlayout_spec_nopq"
@@ -1019,10 +631,10 @@ class GraphLayoutSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     assert(layout.pq.isEmpty && layout.codes.isEmpty)
     // full-precision serving still works
-    assert(GraphLayout.search(layout, queries, 10, 40, 2,
+    assert(GraphLayout.serve(layout, queries, 10, 40, 2,
       Metric.L2).count() > 0)
     assertThrows[RuntimeException] {
-      GraphLayout.searchAdc(layout, queries, 10, 40, 2)
+      GraphLayout.serveAdc(layout, queries, 10, 40, 2)
     }
   }
 
@@ -1084,5 +696,45 @@ class GraphLayoutSpec extends SparkSpec {
       GraphLayout.serveCold(spark, path, queries, 10, 40, 2, Metric.L2) }
     assert(e.getMessage.contains("marker"))
     lease.complete()
+  }
+
+  test("cold serves over a centroid with no rows (k-means left it " +
+      "empty) ≡ serve*(open(path)); a batch probing only empty " +
+      "centroids returns zero rows") {
+    import graft.operators.BinaryQuant
+    val (data, cents, clustered, graph, p) = fixture()
+    val path = "/tmp/graft_graphlayout_spec_empty_centroid"
+    // centroid 99 sits far from every row: no row is assigned to it, so
+    // the store has no cluster_id=99 dirs
+    val far = cents.head._2.map(_ + 1000.0)
+    GraphLayout.write(clustered, graph, cents :+ (99L -> far), path,
+      pq = Some(p), bin = Some(BinaryQuant.train(data)))
+    val layout = GraphLayout.open(spark, path)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("query_id", "rnk", "neighbor_id")
+      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+    val farQ = Seq((999999L, far.toArray)).toDF("query_id", "qvec")
+    // the far query probes the empty centroid AND its nearest real one
+    val q = Tables.embeddingQueries(spark, sfDir).unionByName(farQ)
+    assert(Vamana.probedShards(farQ, layout.centroids, 2, Metric.L2)
+      .contains(99L))
+    val full = rows(GraphLayout.serveCold(spark, path, q, 10, 40, 2,
+      Metric.L2))
+    assert(full.exists(_.head == 999999L))
+    assert(full === rows(GraphLayout.serve(layout, q, 10, 40, 2, Metric.L2)))
+    assert(rows(GraphLayout.serveAdcCold(spark, path, q, 10, 40, 2,
+        kReorder = 4)) ===
+      rows(GraphLayout.serveAdc(layout, q, 10, 40, 2, kReorder = 4)))
+    assert(rows(GraphLayout.serveHammingCold(spark, path, q, 10, 1 << 14,
+        2, kReorder = 4)) ===
+      rows(GraphLayout.serveHamming(layout, q, 10, 1 << 14, 2,
+        kReorder = 4)))
+    // probing ONLY the empty centroid: no rows, not an error
+    assert(GraphLayout.serveCold(spark, path, farQ, 10, 40, 1, Metric.L2)
+      .count() === 0)
+    assert(GraphLayout.serveAdcCold(spark, path, farQ, 10, 40, 1,
+      kReorder = 4).count() === 0)
+    assert(GraphLayout.serve(layout, farQ, 10, 40, 1, Metric.L2)
+      .count() === 0)
   }
 }

@@ -163,7 +163,7 @@ class HierRoutingSpec extends SparkSpec {
     assert(l1.size === 2 && groupOf.size === 11)
   }
 
-  test("searchRouted refuses a metric mismatched with the stored " +
+  test("routed serve refuses a metric mismatched with the stored " +
       "routing level") {
     import graft.operators.GraphLayout
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
@@ -179,14 +179,14 @@ class HierRoutingSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     assert(layout.routingMetricName === Some("cosine"))
     val e = intercept[IllegalArgumentException] {
-      GraphLayout.searchRouted(layout, q, 10, 32, 2, 8, Metric.L2)
+      GraphLayout.serve(layout, q, 10, 32, 8, Metric.L2, l1Probes = 2)
     }
     assert(e.getMessage.contains("trained for metric"))
-    // the matching metric serves, and exhaustive-l1 equals unrouted search
-    val routed = GraphLayout.searchRouted(layout, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.Cosine)
+    // the matching metric serves, and exhaustive-l1 equals unrouted serve
+    val routed = GraphLayout.serve(layout, q, 10, 32, nProbes = 8,
+        Metric.Cosine, l1Probes = 7)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flat = GraphLayout.search(layout, q, 10, 32, 8, Metric.Cosine)
+    val flat = GraphLayout.serve(layout, q, 10, 32, 8, Metric.Cosine)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(routed === flat)
     // upsert retrains with the STORED metric and keeps serving cosine
@@ -198,16 +198,17 @@ class HierRoutingSpec extends SparkSpec {
     val up = GraphLayout.upsert(spark, path, added, delIds,
       BuildParams(maxDegree = 12, buildWindow = 24), Metric.Cosine)
     assert(up.routingMetricName === Some("cosine"))
-    val routedUp = GraphLayout.searchRouted(up, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.Cosine)
+    val routedUp = GraphLayout.serve(up, q, 10, 32, nProbes = 8,
+        Metric.Cosine, l1Probes = 7)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flatUp = GraphLayout.search(up, q, 10, 32, 8, Metric.Cosine)
+    val flatUp = GraphLayout.serve(up, q, 10, 32, 8, Metric.Cosine)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(routedUp === flatUp)
   }
 
-  test("stored layout persists the routing level: searchRouted at " +
-      "exhaustive l1Probes equals search; missing routing fails loudly") {
+  test("stored layout persists the routing level: routed serve at " +
+      "exhaustive l1Probes equals flat serve; a store without routing " +
+      "serves flat") {
     import graft.operators.GraphLayout
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
     val q = Tables.embeddingQueries(spark, sfDir)
@@ -221,20 +222,20 @@ class HierRoutingSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     val (l1, groupOf) = layout.routing.get
     assert(l1.length === 7 && groupOf.keySet === cents.map(_._1).toSet)
-    val routed = GraphLayout.searchRouted(layout, q, 10, 32,
-        l1Probes = l1.length, nProbes = 8, Metric.L2)
+    val routed = GraphLayout.serve(layout, q, 10, 32, nProbes = 8,
+        Metric.L2, l1Probes = l1.length)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flat = GraphLayout.search(layout, q, 10, 32, 8, Metric.L2)
+    val flat = GraphLayout.serve(layout, q, 10, 32, 8, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(routed === flat)
-    // a layout written without routing refuses searchRouted loudly
+    // a layout written without routing has no level to route through:
+    // l1Probes is ignored and the serve probes flat
     val pathNo = "/tmp/graft_hier_layout_none"
     GraphLayout.write(clustered, graph, cents, pathNo)
     val bare = GraphLayout.open(spark, pathNo)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchRouted(bare, q, 10, 32, 2, 8, Metric.L2)
-    }
-    assert(e.getMessage.contains("routingGroups"))
+    assert(bare.routing.isEmpty)
+    assert(GraphLayout.serve(bare, q, 10, 32, 8, Metric.L2, l1Probes = 2)
+      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq === flat)
     // a REWRITE without routingGroups ignores the stale routing dirs
     // (sidecar-gated like pq/bin) instead of silently serving them
     GraphLayout.write(clustered, graph, cents, path)
@@ -254,16 +255,16 @@ class HierRoutingSpec extends SparkSpec {
     val (_, g2) = up.routing.getOrElse(fail("routing lost by upsert"))
     assert(g2.keySet === up.centroids.map(_._1).toSet,
       "retrained routing does not cover the post-upsert centroids")
-    val routedUp = GraphLayout.searchRouted(up, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.L2)
+    val routedUp = GraphLayout.serve(up, q, 10, 32, nProbes = 8,
+        Metric.L2, l1Probes = 7)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flatUp = GraphLayout.search(up, q, 10, 32, 8, Metric.L2)
+    val flatUp = GraphLayout.serve(up, q, 10, 32, 8, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(routedUp === flatUp)
   }
 
-  test("searchRoutedLocal (zero-corpus-shuffle serve) ≡ searchRouted " +
-      "bit-for-bit across residencies; shuffles only top-k partials") {
+  test("routed stored serve ≡ the in-memory routed walk bit-for-bit " +
+      "across residencies; shuffles only top-k partials") {
     import graft.operators.GraphLayout
     val s = spark
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
@@ -271,8 +272,8 @@ class HierRoutingSpec extends SparkSpec {
     val cents = data.filter(col("id") % 10 === 3).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq).toIndexedSeq
     // three residencies through the same lifecycle: f64, u8-marked
-    // bytes, f16 halves — the local path must pick the same
-    // element-resident store the cogroup branches do
+    // bytes, f16 halves — the stored serve must pick the same
+    // element-resident store the in-memory branches do
     val frames: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
       ("f64", data),
       ("u8", graft.functions.ByteVecs.markUnsigned(data.select(col("id"),
@@ -297,56 +298,51 @@ class HierRoutingSpec extends SparkSpec {
       val layout = GraphLayout.open(s, path)
       val meter = new graft.ShuffleProbe(s)
       try {
-        val local = GraphLayout.searchRoutedLocal(layout, q, 10, 32,
-            l1Probes = 3, nProbes = 8, Metric.L2)
+        val local = GraphLayout.serve(layout, q, 10, 32, nProbes = 8,
+            Metric.L2, l1Probes = 3)
           .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
         val localShuffle = meter.readBytes()
-        val cogrouped = GraphLayout.searchRouted(layout, q, 10, 32,
-            l1Probes = 3, nProbes = 8, Metric.L2)
+        val (l1, groupOf) = layout.routing.get
+        val cogrouped = Vamana.searchShardedHierarchical(q,
+            layout.clustered, layout.graph, layout.centroids, l1, groupOf,
+            10, 32, l1Probes = 3, nProbes = 8, Metric.L2)
           .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
         val cogroupShuffle = meter.readBytes() - localShuffle
         assert(local === cogrouped, tag)
         localShuffles(tag) = localShuffle
-        // the local serve exchanges only the |Q|·nProbes·k partials —
-        // well under the cogroup path, which moves every probed row.
+        // the stored serve exchanges only the |Q|·nProbes·k partials —
+        // well under the in-memory walk, which moves every probed row.
         // The corpus-vs-partials gap is only visible on the widest
         // residency at this test scale (byte/half corpora shrink toward
         // partials size); the f64 leg pins it, the cross-residency
         // check below pins the rest.
         if (tag == "f64")
           assert(localShuffle < cogroupShuffle / 2,
-            s"$tag: local serve shuffled $localShuffle B vs cogroup " +
+            s"$tag: stored serve shuffled $localShuffle B vs cogroup " +
               s"$cogroupShuffle B — corpus rows leaked into an exchange")
       } finally meter.close()
     }
     // partials are (query_id, id, dist) regardless of residency: if
-    // corpus rows leaked into the local serve's exchange, the f64 leg
+    // corpus rows leaked into the stored serve's exchange, the f64 leg
     // would shuffle ~8× the u8 leg — they must instead be within noise
     assert(localShuffles("f64") <= 2 * localShuffles("u8"),
       s"local-serve shuffle scales with residency width: $localShuffles")
     assert(localShuffles("f16") <= 2 * localShuffles("u8"),
       s"local-serve shuffle scales with residency width: $localShuffles")
-    // a layout not opened from disk refuses the local path loudly
-    val mem = GraphLayout.open(s, "/tmp/graft_local_serve_f64")
-      .copy(path = None)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchRoutedLocal(mem, q, 10, 32, 3, 8, Metric.L2)
-    }
-    assert(e.getMessage.contains("open"))
-    // traverse-but-filter carries into the local path: at exhaustive
+    // traverse-but-filter carries into the stored serve: at exhaustive
     // l1Probes it must equal searchShardedFiltered over the reopened
     // frames (filtered rows walked through, never emitted)
     val layoutF = GraphLayout.open(s, "/tmp/graft_local_serve_f64")
     val pred = col("id") % 3 =!= 1
-    val localF = GraphLayout.searchRoutedLocal(layoutF, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.L2, keep = pred)
+    val localF = GraphLayout.serve(layoutF, q, 10, 32, nProbes = 8,
+        Metric.L2, l1Probes = 7, keep = pred)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val cogroupF = Vamana.searchShardedFiltered(q, layoutF.clustered,
         layoutF.graph, layoutF.centroids, 10, 32, 8, Metric.L2, pred)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(localF === cogroupF)
-    val unfiltered = GraphLayout.searchRoutedLocal(layoutF, q, 10, 32,
-        7, 8, Metric.L2)
+    val unfiltered = GraphLayout.serve(layoutF, q, 10, 32, 8, Metric.L2,
+        l1Probes = 7)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(localF.nonEmpty && localF != unfiltered,
       "the predicate must actually change the result set")

@@ -77,6 +77,30 @@ class IndexLayoutSpec extends SparkSpec {
     lease.complete()
   }
 
+  test("serveCold over a centroid with no rows (k-means left it empty) " +
+      "≡ serve(open(path)); a batch probing only empty centroids " +
+      "returns zero rows") {
+    val (_, cents, clustered, p) = fixture()
+    val path = "/tmp/graft_indexlayout_spec_empty_centroid"
+    // centroid 99 sits far from every row: no row is assigned to it, so
+    // the store has no cluster_id=99 dir
+    val far = cents.head._2.map(_ + 1000.0)
+    IndexLayout.write(clustered, cents :+ (99L -> far), path,
+      IndexLayout.PqResC(p))
+    val farQ = Seq((999999L, far.toArray)).toDF("query_id", "qvec")
+    // the far query probes the empty centroid AND its nearest real one
+    val q = Tables.embeddingQueries(spark, sfDir).unionByName(farQ)
+    val full = IndexLayout.serve(IndexLayout.open(spark, path), q, 10, 2,
+        Metric.L2)
+      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+    assert(full.exists(_.head == 999999L))
+    assert(IndexLayout.serveCold(spark, path, q, 10, 2, Metric.L2)
+      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq == full)
+    // probing ONLY the empty centroid: no rows, not an error
+    assert(IndexLayout.serveCold(spark, path, farQ, 10, 1, Metric.L2)
+      .count() === 0)
+  }
+
   test("upsert ≡ from-scratch layout of the merged corpus (IVFADC: " +
       "residual codes re-encoded against the REFRESHED centroid); " +
       "untouched partitions' files not rewritten; emptied shards vanish") {

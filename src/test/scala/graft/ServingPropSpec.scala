@@ -206,16 +206,12 @@ class ServingPropSpec extends SparkSpec {
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
       // pure ADC, full window + all probes: the entry point must land on
-      // brute-force flat ADC (same contract as the cogroup walk)
+      // the in-memory ADC walk and on brute-force flat ADC
+      val codes = Pq.encodeClustered(clustered, p)
       val served = rowsOf(graft.operators.GraphLayout.serveAdc(layout,
         queries, 7, 1 << 12, nProbes = 3))
-      assert(served === rowsOf(graft.operators.GraphLayout.searchAdcLocal(
-        layout, queries, 7, 1 << 12, nProbes = 3)), s"seed $seed local")
-      assert(served === rowsOf(graft.operators.GraphLayout.searchAdc(
-        layout, queries, 7, 1 << 12, nProbes = 3)), s"seed $seed cogroup")
-      assert(served === rowsOf(graft.operators.GraphLayout.serveAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3, localMaxFraction = 0.0)),
-        s"seed $seed dialed")
+      assert(served === rowsOf(Vamana.searchShardedAdc(queries, codes,
+        graph, cents, p, 7, 1 << 12, nProbes = 3)), s"seed $seed in-memory")
       assert(served.map(r => (r(0), r(1), r(2))).toSet ===
         Pq.searchAdc(queries, Pq.encode(data, p), p, 7)
           .select("query_id", "rnk", "neighbor_id")
@@ -226,9 +222,9 @@ class ServingPropSpec extends SparkSpec {
       val keep = col("id") % 2 === 0
       val kept = rowsOf(graft.operators.GraphLayout.serveAdc(layout,
         queries, 7, 1 << 12, nProbes = 3, kReorder = 2, keep = keep))
-      assert(kept === rowsOf(graft.operators.GraphLayout.searchAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3, kReorder = 2, keep = keep)),
-        s"seed $seed keep parity")
+      assert(kept === rowsOf(Vamana.searchShardedAdcRerank(queries, codes,
+        graph, cents, p, clustered, 7, 2, 1 << 12, nProbes = 3,
+        keep = keep)), s"seed $seed keep parity")
       kept.foreach(r => assert(r(2).asInstanceOf[Long] % 2 === 0,
         s"seed $seed emitted an excluded id"))
     }
@@ -258,7 +254,7 @@ class ServingPropSpec extends SparkSpec {
       // kReorder·k ≥ n + full window + all probes ⇒ the Hamming walk
       // shortlists EVERY row and the exact rerank is exact kNN — the
       // stored binary path's analog of the full-window contract
-      val exhaustive = graft.operators.GraphLayout.searchHamming(layout,
+      val exhaustive = graft.operators.GraphLayout.serveHamming(layout,
           queries, k, 1 << 12, nProbes = 3, kReorder = (n / k) + 1)
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
@@ -268,7 +264,7 @@ class ServingPropSpec extends SparkSpec {
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
       assert(exhaustive === exact, s"seed $seed")
       // bounded width still yields k ranked rows per query
-      val bounded = graft.operators.GraphLayout.searchHamming(layout,
+      val bounded = graft.operators.GraphLayout.serveHamming(layout,
         queries, k, 1 << 12, nProbes = 3, kReorder = 2)
       assert(bounded.groupBy("query_id").count().collect()
         .forall(_.getLong(1) === k), s"seed $seed bounded")
@@ -296,18 +292,18 @@ class ServingPropSpec extends SparkSpec {
       def rowsOf(df: org.apache.spark.sql.DataFrame) = df
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+      // the in-memory Hamming walk over v1 word-doubles + exact rerank
+      val (qWords, wordCents) = BinaryQuant.wordSpace(queries, cents, b)
+      val wordVecs = clustered.select(col("cluster_id"), col("id"),
+        array(BinaryQuant.codeColumns(col("vec"), b)
+          .map(_.cast("double")): _*).as("vec"))
       for (np <- Seq(1, 3)) {
         val served = rowsOf(graft.operators.GraphLayout.serveHamming(
           layout, queries, 6, 1 << 12, nProbes = np, kReorder = 3))
-        assert(served === rowsOf(graft.operators.GraphLayout
-            .searchHammingLocal(layout, queries, 6, 1 << 12, nProbes = np,
-              kReorder = 3)), s"seed $seed np $np local")
-        assert(served === rowsOf(graft.operators.GraphLayout
-            .searchHamming(layout, queries, 6, 1 << 12, nProbes = np,
-              kReorder = 3)), s"seed $seed np $np cogroup")
-        assert(served === rowsOf(graft.operators.GraphLayout.serveHamming(
-          layout, queries, 6, 1 << 12, nProbes = np, kReorder = 3,
-          localMaxFraction = 0.0)), s"seed $seed np $np dialed")
+        assert(served === rowsOf(graft.operators.Rerank.exact(
+            Vamana.searchSharded(qWords, wordVecs, graph, wordCents, 3 * 6,
+              1 << 12, np, Metric.Hamming), queries, clustered, 6,
+            Metric.L2)), s"seed $seed np $np in-memory")
       }
     }
   }
@@ -331,18 +327,13 @@ class ServingPropSpec extends SparkSpec {
       .map { case (id, v) => (id + 400, v.map(1.0 - _)) }
       .toDF("query_id", "qvec")
     val none = queries.limit(0)
-    // empty batches: every dispatcher returns empty, both dispatch dials
-    for (lmf <- Seq(1.0, 0.0)) {
-      assert(graft.operators.GraphLayout.serve(layout, none, 5, 1 << 12,
-        nProbes = 2, Metric.L2, l1Probes = 1,
-        localMaxFraction = lmf).count() === 0, s"serve lmf=$lmf")
-      assert(graft.operators.GraphLayout.serveAdc(layout, none, 5,
-        1 << 12, nProbes = 2, localMaxFraction = lmf).count() === 0,
-        s"serveAdc lmf=$lmf")
-      assert(graft.operators.GraphLayout.serveHamming(layout, none, 5,
-        1 << 12, nProbes = 2, kReorder = 2,
-        localMaxFraction = lmf).count() === 0, s"serveHamming lmf=$lmf")
-    }
+    // empty batches: every serve returns empty
+    assert(graft.operators.GraphLayout.serve(layout, none, 5, 1 << 12,
+      nProbes = 2, Metric.L2, l1Probes = 1).count() === 0, "serve")
+    assert(graft.operators.GraphLayout.serveAdc(layout, none, 5,
+      1 << 12, nProbes = 2).count() === 0, "serveAdc")
+    assert(graft.operators.GraphLayout.serveHamming(layout, none, 5,
+      1 << 12, nProbes = 2, kReorder = 2).count() === 0, "serveHamming")
     // k > n: exhaustive probes + full window return all n rows ranked —
     // per query — through every dispatcher (the walk emits min(k,
     // reachable) per shard and the final top-k keeps them all)
@@ -479,25 +470,17 @@ class ServingPropSpec extends SparkSpec {
       def rowsOf(df: org.apache.spark.sql.DataFrame) = df
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-      val manualLocal = rowsOf(graft.operators.GraphLayout
-        .searchRoutedLocal(layout, queries, 5, 1 << 12, l1Probes = 2,
-          nProbes = 4, Metric.L2, keep = keep))
-      val manualCogroup = rowsOf(Vamana.searchShardedHierarchical(queries,
+      val served = rowsOf(graft.operators.GraphLayout.serve(layout,
+        queries, 5, 1 << 12, nProbes = 4, Metric.L2, l1Probes = 2,
+        keep = keep))
+      assert(served === rowsOf(Vamana.searchShardedHierarchical(queries,
         layout.clustered, layout.graph, layout.centroids,
         layout.routing.get._1, layout.routing.get._2, 5, 1 << 12,
-        l1Probes = 2, nProbes = 4, Metric.L2, keep = keep))
-      assert(manualLocal === manualCogroup, s"$seed/$res manual parity")
-      // default threshold (1.0) dispatches local; dialed to 0 forces
-      // the cogroup outcome via Auto — both ≡ the manual rows
-      assert(rowsOf(graft.operators.GraphLayout.serve(layout, queries, 5,
-        1 << 12, nProbes = 4, Metric.L2, l1Probes = 2, keep = keep)) ===
-        manualLocal, s"$seed/$res auto-local")
-      assert(rowsOf(graft.operators.GraphLayout.serve(layout, queries, 5,
-        1 << 12, nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-        localMaxFraction = 0.0)) === manualLocal, s"$seed/$res auto-cogroup")
-      manualLocal.foreach(r =>
+        l1Probes = 2, nProbes = 4, Metric.L2, keep = keep)),
+        s"$seed/$res in-memory parity")
+      served.foreach(r =>
         assert(r(2).asInstanceOf[Long] % 3 !== 1, s"$seed/$res keep"))
-      assert(manualLocal.nonEmpty)
+      assert(served.nonEmpty)
     }
   }
 }

@@ -169,132 +169,6 @@ class StreamingServeSpec extends SparkSpec {
       === 1L)
   }
 
-  test("decisionLog: each batch probes once, records what dispatched, " +
-      "and the logged map is the one the serve ran on (rows ≡ batch)") {
-    val out = "/tmp/graft_streaming_serve_decisions"
-    val log = "/tmp/graft_streaming_serve_decisions_log"
-    cleanDir(log)
-    // total BEFORE anything is written
-    val empty = StreamingServe.decisions(spark, log)
-    assert(empty.count() === 0L)
-    assert(empty.columns.toSet ===
-      Set("batch_id", "slice", "mode", "fraction", "probed_shards",
-        "serve_ms"))
-    val res = streamed(queryRows, 2, out)(st =>
-      StreamingServe.attachGraph(st, layout, out, ckpt(), K, W,
-        nProbes = 2, Metric.L2, decisionLog = Some(log)))
-    assert(tuples(res) === tuples(GraphLayout.serve(layout,
-      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2,
-      Metric.L2)))
-    val d = StreamingServe.decisions(spark, log).collect()
-    assert(d.nonEmpty)
-    // the layout is stored on disk → Auto dispatches local for every batch
-    assert(d.forall(_.getAs[String]("mode") == "local"))
-    assert(d.forall(_.getAs[Int]("probed_shards") >= 1))
-    assert(d.map(_.getAs[Long]("batch_id")).distinct.length === d.length,
-      "one decision row per (batch, slice)")
-    // the latency leg: every batch carries a positive measured serve
-    // wall, shared across its slice rows (one sink write per batch)
-    assert(d.forall(_.getAs[Double]("serve_ms") > 0.0))
-    d.groupBy(_.getAs[Long]("batch_id")).values.foreach { rows =>
-      assert(rows.map(_.getAs[Double]("serve_ms")).distinct.length === 1,
-        "slices of one batch must share the batch's serve wall")
-    }
-    // forced mode is what the log records (override honored in provenance)
-    val res2 = streamed(queryRows, 1, out)(st =>
-      StreamingServe.attachGraph(st, layout, out, ckpt(), K, W,
-        nProbes = 2, Metric.L2, mode = GraphLayout.ServeMode.Cogroup,
-        decisionLog = Some(log)))
-    assert(tuples(res2).nonEmpty)
-    val modes = StreamingServe.decisions(spark, log)
-      .filter(col("batch_id") === 0L).collect().map(_.getAs[String]("mode"))
-    assert(modes.nonEmpty && modes.forall(_ == "cogroup"))
-    // the capacity-planning aggregate over the same log: totals line up
-    // with the raw rows, and an unwritten log aggregates to zero rows
-    val stats = StreamingServe.decisionStats(spark, log).collect()
-      .map(r => r.getAs[String]("mode") -> r).toMap
-    val raw = StreamingServe.decisions(spark, log).collect()
-    assert(stats.values.map(_.getAs[Long]("slices")).sum === raw.length)
-    stats.foreach { case (m, r) =>
-      val ofMode = raw.filter(_.getAs[String]("mode") == m)
-      assert(r.getAs[Long]("batches") ===
-        ofMode.map(_.getAs[Long]("batch_id")).distinct.length)
-      assert(r.getAs[Int]("max_probed") ===
-        ofMode.map(_.getAs[Int]("probed_shards")).max)
-      // latency ties to the raw rows: one wall per batch, the stats
-      // fold over the per-batch walls of this mode
-      val walls = ofMode.map(r2 => (r2.getAs[Long]("batch_id"),
-        r2.getAs[Double]("serve_ms"))).distinct.map(_._2)
-      assert(r.getAs[Double]("max_serve_ms") === walls.max)
-      assert(r.getAs[Double]("p90_serve_ms") >= walls.min &&
-        r.getAs[Double]("p90_serve_ms") <= walls.max)
-      assert(r.getAs[Double]("p50_serve_ms") <=
-        r.getAs[Double]("p90_serve_ms"))
-    }
-    assert(StreamingServe.decisionStats(spark,
-      "/tmp/graft_streaming_serve_no_such_log").count() === 0L)
-    // totality for PRE-LATENCY logs: a log written without serve_ms
-    // reads with a NULL column and aggregates with NULL latency stats
-    val oldLog = "/tmp/graft_streaming_serve_decisions_oldlog"
-    cleanDir(oldLog)
-    Seq((0, "local", 0.5, 2)).toDF("slice", "mode", "fraction",
-        "probed_shards")
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(oldLog)
-    val old = StreamingServe.decisions(spark, oldLog)
-    assert(old.columns.contains("serve_ms"))
-    assert(old.collect().forall(_.isNullAt(old.columns.indexOf("serve_ms"))))
-    val oldStats = StreamingServe.decisionStats(spark, oldLog).collect()
-    assert(oldStats.length === 1 &&
-      oldStats.head.isNullAt(oldStats.head.fieldIndex("p90_serve_ms")))
-    // MIXED log (old batches retained next to post-upgrade ones): the
-    // merged-schema read must keep the new rows' measured walls
-    // regardless of which parquet footer Spark samples — old rows
-    // null-fill, new rows keep serve_ms
-    Seq((0, "local", 0.5, 2, 12.5)).toDF("slice", "mode", "fraction",
-        "probed_shards", "serve_ms")
-      .withColumn("batch_id", lit(1L))
-      .write.mode("append").partitionBy("batch_id").parquet(oldLog)
-    val mixed = StreamingServe.decisions(spark, oldLog).collect()
-    assert(mixed.length === 2)
-    val newRow = mixed.find(_.getAs[Long]("batch_id") == 1L).get
-    assert(newRow.getAs[Double]("serve_ms") === 12.5)
-    assert(mixed.find(_.getAs[Long]("batch_id") == 0L).get
-      .isNullAt(newRow.fieldIndex("serve_ms")))
-    val mixedStats = StreamingServe.decisionStats(spark, oldLog)
-      .collect()
-    assert(mixedStats.head.getAs[Double]("max_serve_ms") === 12.5)
-    // a single-mode log attributes every wall: nothing lands in
-    // mixed_mode_batches
-    assert(mixedStats.forall(_.getAs[Long]("mixed_mode_batches") === 0L))
-    // a MULTI-mode batch (Auto can flip per slice) has one wall and no
-    // single mode to charge it to: its wall is EXCLUDED from every
-    // mode's latency fold and surfaced via mixed_mode_batches instead
-    // of inflating per-mode percentiles with the other mode's slices
-    val mmLog = "/tmp/graft_streaming_serve_decisions_multimode"
-    cleanDir(mmLog)
-    Seq((0, "local", 0.2, 1, 7.0), (1, "cogroup", 0.9, 4, 7.0))
-      .toDF("slice", "mode", "fraction", "probed_shards", "serve_ms")
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(mmLog)
-    Seq((0, "local", 0.3, 2, 3.0))
-      .toDF("slice", "mode", "fraction", "probed_shards", "serve_ms")
-      .withColumn("batch_id", lit(1L))
-      .write.mode("append").partitionBy("batch_id").parquet(mmLog)
-    val mm = StreamingServe.decisionStats(spark, mmLog).collect()
-      .map(r => r.getAs[String]("mode") -> r).toMap
-    assert(mm("local").getAs[Long]("mixed_mode_batches") === 1L)
-    assert(mm("cogroup").getAs[Long]("mixed_mode_batches") === 1L)
-    // local's latency comes from its single-mode batch only
-    assert(mm("local").getAs[Double]("max_serve_ms") === 3.0)
-    assert(mm("local").getAs[Double]("p50_serve_ms") === 3.0)
-    // cogroup ran only inside the mixed batch → NULL latency, counted
-    assert(mm("cogroup").isNullAt(
-      mm("cogroup").fieldIndex("max_serve_ms")))
-    // the dispatch-shape half still counts the mixed batch's slices
-    assert(mm("cogroup").getAs[Long]("slices") === 1L)
-  }
-
   test("burst batches materialize their source plan ONCE: a multi-slice " +
       "batch localCheckpoints before slicing, so a heavy upstream plan " +
       "is not recomputed per slice") {
